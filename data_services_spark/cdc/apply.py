@@ -21,7 +21,9 @@ as one declarative plan):
    commit, the invariant the reference approximates by saving channel info
    only after the move succeeds (``faimms.py:218-225``) and deriving the
    watermark from committed output (``pickle_db.py:64-85``);
-6. lineage + metrics rows per (batch, bucket) appended to their tables.
+6. lineage + metrics rows per (batch, bucket) appended to their tables,
+   written driver-side with pyarrow (``LakeTable.append_rows``) — no
+   Spark job.
 
 Resume = read offsets from the last committed snapshot; a chunk whose ``hi``
 is <= the committed LSN is skipped outright.
@@ -543,14 +545,11 @@ class CdcApplier:
             ]
             if defer_lineage:
                 # replay batches many chunks' rows into ONE lineage commit —
-                # a per-chunk Spark job over a handful of rows is pure fixed
-                # overhead (it scales with chunk count, not data)
+                # fewer control-table commits and files per replay (one
+                # per chunk would scale with chunk count, not data)
                 self._lineage_buf.extend(rows)
             else:
-                self.lineage.append(
-                    self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                    summary={"batch_id": batch_id},
-                )
+                self.lineage.append_rows(rows, summary={"batch_id": batch_id})
             _phase("lineage", tp)
         return stats
 
@@ -708,10 +707,7 @@ class CdcApplier:
             if defer_lineage:
                 self._lineage_buf.extend(rows)
             else:
-                self.lineage.append(
-                    self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                    summary={"batch_id": batch_id},
-                )
+                self.lineage.append_rows(rows, summary={"batch_id": batch_id})
             _phase("lineage", tp)
         if self.metrics is not None:
             self._metrics_buf.append(
@@ -734,13 +730,12 @@ class CdcApplier:
 
     def flush_lineage(self) -> None:
         """Write any buffered lineage + metrics rows, one append commit
-        each (a per-chunk Spark job over a handful of rows would be pure
-        fixed overhead)."""
+        each (one commit per chunk would multiply control-table commits
+        and files over a long replay)."""
         if self._lineage_buf and self.lineage is not None:
             rows, self._lineage_buf = self._lineage_buf, []
-            self.lineage.append(
-                self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                summary={"batch_id": rows[-1]["batch_id"]},
+            self.lineage.append_rows(
+                rows, summary={"batch_id": rows[-1]["batch_id"]}
             )
         self.flush_metrics()
 
@@ -748,12 +743,9 @@ class CdcApplier:
         """Write any buffered batch-level metrics rows as one commit."""
         if not self._metrics_buf or self.metrics is None:
             return
-        from .schemas import METRICS_SCHEMA
-
         rows, self._metrics_buf = self._metrics_buf, []
-        self.metrics.append(
-            self.spark.createDataFrame(rows, METRICS_SCHEMA),
-            summary={"batch_id": rows[-1]["batch_id"]},
+        self.metrics.append_rows(
+            rows, summary={"batch_id": rows[-1]["batch_id"]}
         )
 
     def _summary(
@@ -1066,10 +1058,7 @@ class CdcApplier:
                 }
                 for b, st in sorted(per_bucket.items(), key=lambda kv: int(kv[0]))
             ]
-            self.lineage.append(
-                self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                summary={"batch_id": batch_id},
-            )
+            self.lineage.append_rows(rows, summary={"batch_id": batch_id})
         return snap.snapshot_id
 
     def abandon_chunk(self, wap_id: str) -> int:
@@ -1091,10 +1080,7 @@ class CdcApplier:
                 "status": "wap_abandoned",
                 "duration_ms": 0,
             }]
-            self.lineage.append(
-                self.spark.createDataFrame(row, LINEAGE_SCHEMA),
-                summary={"batch_id": batch_id},
-            )
+            self.lineage.append_rows(row, summary={"batch_id": batch_id})
         return n
 
     # ---------------------------------------------------------------- replay

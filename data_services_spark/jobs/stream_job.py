@@ -79,6 +79,9 @@ def main(argv: list[str] | None = None) -> int:
                          "each view lags the table by at most one batch)")
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args(argv)
+    # before any session or bootstrap: a bad invocation creates nothing
+    if (args.source_dir is None) == (args.bus_transport is None):
+        ap.error("exactly one of --source-dir or --bus-transport is required")
 
     # absolute imports: spark-submit executes this file as a top-level script
     from data_services_spark.cdc.apply import CdcApplier
@@ -119,8 +122,6 @@ def main(argv: list[str] | None = None) -> int:
         schema = T.StructType(CHANGES_SCHEMA.fields + extra.fields)
 
     t0 = time.monotonic()
-    if (args.source_dir is None) == (args.bus_transport is None):
-        ap.error("exactly one of --source-dir or --bus-transport is required")
     if args.bus_transport:
         from pyspark.sql import types as T
 

@@ -302,7 +302,7 @@ class LakeSQL:
             )
         return table.merge_into(
             source,
-            update_set=update_set if update_set is not None else "all",
+            update_set=update_set,
             insert=insert,
             delete_when=delete_when,
             summary={"sql": "merge_into"},

@@ -482,6 +482,43 @@ def _murmur3_int(v: int, seed: int = 42) -> int:
     return h1 - (1 << 32) if h1 >= (1 << 31) else h1
 
 
+def _row_bucket_fn(snap: "Snapshot"):
+    """Driver-side bucket id of a row dict, bit-identical to
+    :func:`_bucket_expr`: a 1-bucket table is bucket 0; otherwise the
+    table must bucket by ONE int key under murmur3, where Spark's
+    ``pmod(hash(k), n)`` is ``_murmur3_int(k) % n`` (a NULL key hashes to
+    the seed, 42). Other key shapes raise ``ValueError``."""
+    n = snap.bucket_count
+    if n == 1:
+        return lambda row: 0
+    keys = snap.bucket_keys
+    if (
+        snap.bucket_fn != "murmur3"
+        or len(keys) != 1
+        or not isinstance(snap.schema[keys[0]].dataType, T.IntegerType)
+    ):
+        raise ValueError(
+            f"driver-side bucketing needs one int bucket key under murmur3 "
+            f"or a 1-bucket table; this table buckets {n} ways by {keys} "
+            f"({snap.bucket_fn})"
+        )
+    k = keys[0]
+    return lambda row: (42 if row[k] is None else _murmur3_int(row[k])) % n
+
+
+def _arrow_column(f: T.StructField, arrow_type: Any, values: list[Any]) -> Any:
+    """One Arrow column of ``values`` under Spark field ``f``. Timestamps
+    go through Spark's own ``TimestampType.toInternal`` (a naive
+    ``datetime`` is process-local time, as in ``createDataFrame``)."""
+    import pyarrow as pa
+
+    if not f.nullable and any(v is None for v in values):
+        raise ValueError(f"NULL in non-nullable column {f.name}")
+    if isinstance(f.dataType, T.TimestampType):
+        values = [f.dataType.toInternal(v) for v in values]
+    return pa.array(values, type=arrow_type)
+
+
 @functools.lru_cache(maxsize=32)
 def _partition_preimages(n: int) -> tuple[int, ...]:
     """preimages[p] = smallest non-negative int whose Spark hash lands in
@@ -1167,7 +1204,9 @@ class LakeTable:
         * WHEN MATCHED → ``update_set`` applied over the current row —
           ``"all"`` overwrites every payload column with the source's,
           a dict maps payload column → Column expression over the
-          aliases ``s`` (source) and ``t`` (target current row);
+          aliases ``s`` (source) and ``t`` (target current row), and
+          ``None`` (no WHEN MATCHED UPDATE clause) leaves the row as it
+          is, payload and order stamp both;
         * WHEN NOT MATCHED → source row inserts (``insert=False`` drops
           unmatched source rows — update-only merge).
 
@@ -1284,7 +1323,9 @@ class LakeTable:
         ]
         action = (
             F.when(matched & has_src & del_cond, "D")
-            .when(matched & has_src, "U")
+            # N: matched, kept unchanged (no update clause) — still one
+            # source row per key, so it joins the duplicate check below
+            .when(matched & has_src, "U" if update_set is not None else "N")
             .when(has_src & F.lit(insert), "I")
             .otherwise("K")  # target-only row (live OR tombstone): carried
         )
@@ -2041,6 +2082,81 @@ class LakeTable:
         df = self._stamp_writer_ranks(df)
         token = f"c{self.current_snapshot_id() + 1}-{uuid.uuid4().hex[:12]}"
         new_files = self._write_data_files(self._with_bucket(df), token, sort_cols)
+        return self._commit_append(new_files, df.schema, summary)
+
+    def append_rows(
+        self,
+        rows: list[dict[str, Any]],
+        summary: dict[str, Any] | None = None,
+    ) -> Snapshot:
+        """Append a few driver-held rows with NO Spark job: pyarrow writes
+        one snappy parquet file per bucket straight into the table layout,
+        then the same retried append commit as :meth:`append`. This is the
+        per-chunk control-table write (lineage, metrics rows), where a
+        Spark write's fixed cost would dwarf the handful of rows.
+
+        Every row must carry exactly the table's columns. Bucket ids are
+        computed driver-side (:func:`_row_bucket_fn`), so the table is
+        either 1-bucket or bucketed by one int key; anything else raises
+        ``ValueError``. A crash between the file write and the commit
+        leaves unreferenced files that ``remove_orphan_files`` reclaims."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        snap = self.snapshot()
+        schema = snap.schema
+        names = {f.name for f in schema.fields}
+        for r in rows:
+            if set(r) != names:
+                raise ValueError(
+                    f"append_rows row columns {sorted(r)} differ from the "
+                    f"table schema {sorted(names)}"
+                )
+        bucket_of = _row_bucket_fn(snap)
+        by_bucket: dict[int, list[dict[str, Any]]] = {}
+        for r in rows:
+            by_bucket.setdefault(bucket_of(r), []).append(r)
+        # Spark writes every parquet column nullable; match its files
+        file_schema = pa.schema(
+            [af.with_nullable(True) for af in to_arrow_schema(schema)]
+        )
+        # every bucket's table is built (and its values checked) before
+        # the first file lands, so a bad row leaves nothing on disk
+        tables = {
+            b: pa.Table.from_arrays(
+                [
+                    _arrow_column(f, af.type, [r[f.name] for r in brows])
+                    for f, af in zip(schema.fields, file_schema)
+                ],
+                schema=file_schema,
+            )
+            for b, brows in sorted(by_bucket.items())
+        }
+        commit_rel = os.path.join(
+            _DATA_DIR, f"c{snap.snapshot_id + 1}-{uuid.uuid4().hex[:12]}"
+        )
+        new_files: dict[str, list[str]] = {}
+        for b, table in tables.items():
+            rel = os.path.join(
+                commit_rel, f"bucket={b}",
+                f"part-00000-{uuid.uuid4()}.c000.snappy.parquet",
+            )
+            path = os.path.join(self.path, rel)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            pq.write_table(table, path, compression="snappy")
+            new_files[str(b)] = [rel]
+        return self._commit_append(new_files, schema, summary)
+
+    def _commit_append(
+        self,
+        new_files: dict[str, list[str]],
+        df_schema: T.StructType,
+        summary: dict[str, Any] | None,
+    ) -> Snapshot:
+        """Commit already-written files as an append. Each attempt re-reads
+        the current snapshot and re-derives the carried-forward file map,
+        so a losing race retries with backoff."""
 
         def attempt() -> Snapshot:
             snap = self.snapshot()
@@ -2048,7 +2164,7 @@ class LakeTable:
                 b: snap.bucket_files.get(b, []) + fs for b, fs in new_files.items()
             }
             schema = self._evolve_schema(
-                snap.schema, df.schema, frozen=snap.bucket_keys
+                snap.schema, df_schema, frozen=snap.bucket_keys
             )
             return self._commit(
                 "append", appended, snap.bucket_files, schema, summary or {},

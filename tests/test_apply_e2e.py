@@ -289,3 +289,63 @@ def test_type_widening_mid_stream(spark, tmp_path):
     )
     assert dict(applier.target.read().dtypes)["score"] == "bigint"
     assert pre_compact.equals(post)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under Spark job group ``group``; return (fn's result,
+    number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_streaming_chunk_commit_starts_only_winner_write_jobs(spark, tmp_path):
+    """A streaming-style chunk commit (``apply_chunk(epoch=e)`` then
+    ``maybe_compact``) starts only the winner write's Spark jobs: its
+    lineage and metrics rows are written driver-side. WAP publish and
+    abandon start none. Counted jobs, not timings: host noise cannot
+    move this guard."""
+    src = str(tmp_path / "changes.parquet")
+    generate_changes(
+        spark, 1500, n_convs=80, max_turns=10, seed=5
+    ).write.parquet(src)
+    changes = spark.read.parquet(src)
+    applier = CdcApplier.bootstrap(spark, str(tmp_path / "lake"), bucket_count=8)
+    chunk = changes.where(F.col("lsn") < 1000)
+
+    def commit():
+        st = applier.apply_chunk(chunk, lo=-1, hi=None, batch_id=0, epoch=0)
+        applier.maybe_compact()
+        return st
+
+    stats, n_jobs = _jobs_in_group(spark, "chunk-commit", commit)
+    assert not stats.skipped and stats.n_quarantined == 0
+    # the winner write: shuffle map stage + bucket-clustered parquet write
+    assert n_jobs == 2, n_jobs
+    lin = applier.lineage.read().where("batch_id = 0").collect()
+    assert sorted(r["source_partition"] for r in lin) == stats.affected_buckets
+    assert all(r["status"] == "ok" for r in lin)
+    met = applier.metrics.read().where("batch_id = 0").collect()
+    assert [(r["epoch"], r["n_events"]) for r in met] == [(0, stats.n_events)]
+
+    rest = changes.where(F.col("lsn") >= 1000)
+    applier.stage_chunk(rest, "w1", epoch=1, batch_id=1)
+    _, n_pub = _jobs_in_group(
+        spark, "publish", lambda: applier.publish_chunk("w1")
+    )
+    applier.stage_chunk(rest, "w2", epoch=2, batch_id=2)
+    _, n_abandon = _jobs_in_group(
+        spark, "abandon", lambda: applier.abandon_chunk("w2")
+    )
+    assert (n_pub, n_abandon) == (0, 0)
+    status = {
+        r["batch_id"]: r["status"]
+        for r in applier.lineage.read().where("batch_id > 0").collect()
+    }
+    assert status == {1: "wap_published", 2: "wap_abandoned"}

@@ -114,3 +114,30 @@ def test_strict_failures(lsql):
         lsql.sql("UPDATE lake.t SET n = 1")  # no WHERE
     with pytest.raises(ValueError, match="arity"):
         lsql.sql("INSERT INTO lake.t VALUES ('x', 1)")
+
+
+def test_merge_conditional_delete_only_leaves_other_matches_untouched(
+    spark, lsql
+):
+    """A MERGE whose only matched clause is ``WHEN MATCHED AND c THEN
+    DELETE`` deletes the rows meeting ``c``; every other matched row is a
+    true no-op — payload AND lsn stamp unchanged (SQL semantics)."""
+    def rows():
+        return {
+            r["k"]: (r["v"], r["n"], r["lsn"])
+            for r in lsql.sql("SELECT * FROM lake.t").collect()
+        }
+
+    before = rows()
+    spark.createDataFrame(
+        [("a", "drop", 0, 50), ("b", "keep", 99, 50)], SCHEMA
+    ).createOrReplaceTempView("dels")
+    res = lsql.sql(
+        """
+        MERGE INTO lake.t t USING dels s ON s.k = t.k
+        WHEN MATCHED AND s.v = 'drop' THEN DELETE
+        """
+    )
+    assert res["deleted"] == 1 and res["updated"] == 0
+    assert res["inserted"] == 0
+    assert rows() == {"b": before["b"], "c": before["c"]}

@@ -428,3 +428,212 @@ def test_tags_named_refs(spark, tmp_table_dir):
         t.read_tag("release-v1")
     with pytest.raises(ValueError):
         t.tag("later", snapshot_id=1)  # can't tag an expired snapshot
+
+
+# ------------------------------------------------ driver-side append_rows
+def _lineage_rows():
+    import datetime as dt
+
+
+    utc = dt.timezone.utc
+    ist = dt.timezone(dt.timedelta(hours=5, minutes=30))
+    keys = [0, 1, 2, 3, -1, -7, 13, 2**31 - 1, -(2**31 - 1), -(2**31)]
+    rows = []
+    for i, k in enumerate(keys):
+        naive = dt.datetime(2024, 3, 10, 1, 30, 0, 123456) + dt.timedelta(hours=i)
+        aware = dt.datetime(2024, 11, 3, 8, 59, 59, 999999, tzinfo=utc if i % 2 else ist)
+        rows.append({
+            "batch_id": 100 + i, "source_partition": k,
+            "n_events": i * 10, "n_upserts": None if i == 3 else i,
+            "n_deletes": 0, "n_quarantined": None,
+            "min_lsn": -i if i % 3 else None, "max_lsn": 2**62 + i,
+            "min_ts": naive, "max_ts": aware if i != 5 else None,
+            "status": None if i == 4 else "ok", "duration_ms": i,
+        })
+    return rows
+
+
+def _metrics_rows():
+    return [
+        {"batch_id": b, "epoch": None if b % 2 else b, "hi_lsn": 1000 * b,
+         "n_events": 5, "n_upserts": 4, "n_deletes": 1, "n_quarantined": 0,
+         "n_winner_rows": None, "n_affected_buckets": 3, "duration_ms": 17}
+        for b in range(6)
+    ]
+
+
+def _readback(t, schema):
+    ts_cols = [f.name for f in schema.fields
+               if isinstance(f.dataType, T.TimestampType)]
+    df = t.read()
+    # raw UTC micros too: equality must not hinge on the collect-side
+    # local-time conversion both paths share
+    df = df.select("*", *[F.unix_micros(c).alias(f"_us_{c}") for c in ts_cols])
+    return sorted(df.collect(), key=lambda r: (r["batch_id"], str(r)))
+
+
+def _bucket_keys_on_disk(t, key):
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for b, files in t.snapshot().bucket_files.items():
+        out[int(b)] = sorted(
+            v for f in files
+            for v in pq.read_table(os.path.join(t.path, f)).column(key).to_pylist()
+        )
+    return out
+
+
+@pytest.mark.parametrize("n_buckets", [4, 7])
+def test_append_rows_matches_spark_append_lineage(spark, tmp_path, n_buckets):
+    """append_rows ≡ append(createDataFrame(rows, schema)): same rows read
+    back (nulls, naive and tz-aware timestamps under a non-UTC session
+    zone), and every int key lands in Spark's pmod(hash(k), n) bucket."""
+    import os
+    import time
+
+    from data_services_spark.cdc.schemas import LINEAGE_SCHEMA
+
+    rows = _lineage_rows()
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    old_env = os.environ.get("TZ")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    os.environ["TZ"] = "Australia/Adelaide"  # naive = process-local time
+    time.tzset()
+    try:
+        drv = LakeTable.create(spark, str(tmp_path / "drv"), LINEAGE_SCHEMA,
+                               ["source_partition"], n_buckets)
+        ref = LakeTable.create(spark, str(tmp_path / "ref"), LINEAGE_SCHEMA,
+                               ["source_partition"], n_buckets)
+        snap = drv.append_rows(rows, summary={"batch_id": 7})
+        ref.append(spark.createDataFrame(rows, LINEAGE_SCHEMA),
+                   summary={"batch_id": 7})
+        assert snap.operation == "append" and snap.summary == {"batch_id": 7}
+        assert drv.snapshot().schema == ref.snapshot().schema
+        got = _readback(drv, LINEAGE_SCHEMA)
+        assert got == _readback(ref, LINEAGE_SCHEMA)
+        assert len(got) == len(rows)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+        if old_env is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_env
+        time.tzset()
+
+    placed = _bucket_keys_on_disk(drv, "source_partition")
+    assert placed == _bucket_keys_on_disk(ref, "source_partition")
+    want: dict[int, list[int]] = {}
+    for r in spark.createDataFrame(
+        [(r["source_partition"],) for r in rows], "k int"
+    ).select("k", F.pmod(F.hash("k"), F.lit(n_buckets)).alias("b")).collect():
+        want.setdefault(r["b"], []).append(r["k"])
+    assert placed == {b: sorted(ks) for b, ks in want.items()}
+    # a second append_rows commit stacks on the first (carried files)
+    drv.append_rows(rows[:2])
+    assert drv.read().count() == len(rows) + 2
+
+
+def test_append_rows_matches_spark_append_metrics(spark, tmp_path):
+    """1-bucket control table (metrics, keyed by a long): everything lands
+    in bucket 0, identical to the Spark write."""
+    from data_services_spark.cdc.schemas import METRICS_SCHEMA
+
+    rows = _metrics_rows()
+    drv = LakeTable.create(spark, str(tmp_path / "drv"), METRICS_SCHEMA,
+                           ["batch_id"], 1)
+    ref = LakeTable.create(spark, str(tmp_path / "ref"), METRICS_SCHEMA,
+                           ["batch_id"], 1)
+    drv.append_rows(rows, summary={"batch_id": 5})
+    ref.append(spark.createDataFrame(rows, METRICS_SCHEMA))
+    assert _readback(drv, METRICS_SCHEMA) == _readback(ref, METRICS_SCHEMA)
+    assert set(drv.snapshot().bucket_files) == {"0"}
+    assert _bucket_keys_on_disk(drv, "batch_id") == _bucket_keys_on_disk(
+        ref, "batch_id"
+    )
+    # a NULL int key lands where Spark puts it (hash(NULL) is the seed)
+    nullable = T.StructType([T.StructField("k", T.IntegerType(), True),
+                             T.StructField("v", T.StringType(), True)])
+    krows = [{"k": None, "v": "n"}, {"k": 0, "v": "x"}, {"k": -2, "v": "y"}]
+    drv = LakeTable.create(spark, str(tmp_path / "drv_k"), nullable, ["k"], 4)
+    ref = LakeTable.create(spark, str(tmp_path / "ref_k"), nullable, ["k"], 4)
+    drv.append_rows(krows)
+    ref.append(spark.createDataFrame(krows, nullable))
+    on_disk = _bucket_keys_on_disk(drv, "v")
+    assert on_disk == _bucket_keys_on_disk(ref, "v")
+    assert on_disk == {2: ["n"], 3: ["x"], 1: ["y"]}
+
+
+def test_append_rows_rejects_bad_rows_and_key_shapes(spark, tmp_path):
+    from data_services_spark.cdc.schemas import LINEAGE_SCHEMA, METRICS_SCHEMA
+
+    lin = LakeTable.create(spark, str(tmp_path / "lin"), LINEAGE_SCHEMA,
+                           ["source_partition"], 4)
+    row = _lineage_rows()[0]
+    with pytest.raises(ValueError, match="differ from the table schema"):
+        lin.append_rows([{**row, "extra": 1}])
+    missing = dict(row)
+    del missing["status"]
+    with pytest.raises(ValueError, match="differ from the table schema"):
+        lin.append_rows([row, missing])
+    with pytest.raises(ValueError, match="non-nullable"):
+        # the bad row's bucket (3) sorts after a good one's (2): still
+        # nothing lands
+        lin.append_rows(_lineage_rows()[:4] + [{**row, "source_partition": 3,
+                                                "batch_id": None}])
+    # multi-bucket tables need ONE int key: a string key, a long key and
+    # a composite key all refuse (Spark hashes them differently)
+    for name, schema, keys in (
+        ("s", SCHEMA, ["k"]),
+        ("l", METRICS_SCHEMA, ["batch_id"]),
+        ("c", SCHEMA, ["i", "k"]),
+    ):
+        t = LakeTable.create(spark, str(tmp_path / name), schema, keys, 4)
+        r = {f.name: None for f in schema.fields}
+        with pytest.raises(ValueError, match="one int bucket key"):
+            t.append_rows([r])
+    assert lin.current_snapshot_id() == 0
+    assert not (tmp_path / "lin" / "data").exists()
+
+
+def test_append_rows_crash_before_commit_leaves_only_orphans(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the pyarrow file write and the commit: no snapshot
+    sees the files, reads are unchanged, and remove_orphan_files — not
+    expire_snapshots — reclaims exactly those files."""
+    import os
+
+    from data_services_spark.cdc.schemas import LINEAGE_SCHEMA
+
+    t = LakeTable.create(spark, str(tmp_path / "lin"), LINEAGE_SCHEMA,
+                         ["source_partition"], 4)
+    rows = _lineage_rows()
+    t.append_rows(rows[:3])
+    live = set(t.snapshot().all_files())
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(LakeTable, "_commit_append", crash)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        t.append_rows(rows)
+    monkeypatch.undo()
+
+    assert t.current_snapshot_id() == 1
+    assert t.read().count() == 3
+    on_disk = {
+        os.path.relpath(os.path.join(dp, f), t.path)
+        for dp, _, fs in os.walk(os.path.join(t.path, "data")) for f in fs
+    }
+    orphans = on_disk - live
+    assert orphans and all(f.endswith(".parquet") for f in orphans)
+    t.expire_snapshots(keep_last=1, orphan_grace_sec=0)
+    assert orphans <= {
+        os.path.relpath(os.path.join(dp, f), t.path)
+        for dp, _, fs in os.walk(os.path.join(t.path, "data")) for f in fs
+    }
+    assert sorted(t.remove_orphan_files(older_than_sec=0)) == sorted(orphans)
+    assert t.read().count() == 3

@@ -317,3 +317,27 @@ def test_stream_restart_with_evolved_schema(spark, tmp_path):
         .count()
         == 0
     )
+
+
+def test_stream_job_bad_source_args_exit_before_touching_disk(tmp_path):
+    """Neither or both of --source-dir / --bus-transport is a usage error
+    (exit 2) raised before any session or table exists: --root stays
+    absent."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo}
+    for extra in ([], ["--source-dir", str(tmp_path / "src"),
+                       "--bus-transport", "file"]):
+        root = tmp_path / "lake"
+        proc = subprocess.run(
+            [sys.executable, "-m", "data_services_spark.jobs.stream_job",
+             "--root", str(root), "--checkpoint", str(tmp_path / "ckpt"),
+             *extra],
+            cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+        )
+        assert proc.returncode == 2, proc.stderr[-2000:]
+        assert "exactly one of --source-dir or --bus-transport" in proc.stderr
+        assert not root.exists()
