@@ -1,4 +1,4 @@
-"""The CDC apply loop: change chunks -> LWW dedup -> bucket-pruned MERGE.
+"""The CDC apply loop: change chunks -> LWW dedup -> merge-on-read delta append.
 
 Per replay chunk (SURVEY.md §7.0, restating the reference's
 fetch/validate/stage/commit lifecycle ``FAIMMS/REALTIME/faimms.py:123-229``
@@ -9,13 +9,15 @@ as one declarative plan):
 2. validation gates -> quarantine branch (``faimms.py:199-207``);
 3. LWW dedup to one row per ``(conv_id, turn_idx)`` (map-side-combining
    aggregate; explicit salting available for pathological hot keys);
-4. MERGE: union the deduped winners with the *current rows of only the
-   affected buckets*, re-run LWW against the stored ``(ts, lsn)`` of each
-   target row, drop delete-winners, rewrite those buckets copy-on-write.
-   Unaffected buckets carry forward as metadata. Because the target keeps
-   each row's writer ``(ts, lsn)``, re-applying any already-committed chunk
-   (or any overlap) is a physical no-op on row content — at-least-once
-   delivery + idempotent apply = exactly-once effect;
+4. delta append: the deduped winners — delete winners included, as key
+   tombstones — are written as one merge-on-read delta layer of only the
+   affected buckets; reads resolve LWW across base ∪ deltas by each row's
+   writer ``(ts, lsn)``, so re-applying any already-committed chunk (or any
+   overlap) is a no-op on the resolved state — at-least-once delivery +
+   idempotent apply = exactly-once effect. Between chunks, any bucket whose
+   delta layer count reaches ``compact_threshold`` is compacted back into
+   one read-optimised base file (``compact_threshold=1`` compacts after
+   every chunk);
 5. one atomic snapshot commit whose summary carries the new offsets
    (``last_lsn``, per-bucket watermarks) — checkpoint and data are the same
    commit, the invariant the reference approximates by saving channel info
@@ -31,21 +33,10 @@ is <= the committed LSN is skipped outright.
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 from dataclasses import dataclass, field
 from typing import Any
-
-_PHASE_TIMING = os.environ.get("DSS_PHASE_TIMING") == "1"
-
-
-def _phase(label: str, t0: float) -> float:
-    """Optional stderr phase-timing (DSS_PHASE_TIMING=1) for bench tuning."""
-    t1 = time.monotonic()
-    if _PHASE_TIMING:
-        print(f"[phase] {label}: {t1 - t0:.3f}s", file=sys.stderr)
-    return t1
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,6 +62,54 @@ class ChunkStats:
     affected_buckets: list[int] = field(default_factory=list)
 
 
+@dataclass
+class _ChunkWrite:
+    """One chunk's written-but-uncommitted delta layer (``_write_chunk``)."""
+
+    snap: Any  # the snapshot the commit must land on
+    batch_id: int
+    hi: int | None
+    n_events: int
+    n_upserts: int
+    n_deletes: int
+    n_quarantined: int
+    new_files: dict
+    schema: Any
+    per_bucket: dict
+    summary: dict
+
+
+def _lineage_rows(
+    batch_id: int,
+    per_bucket: dict,
+    status: str,
+    n_quarantined: int = 0,
+    duration_ms: int = 0,
+) -> list[dict]:
+    """One lineage row per bucket from ``LakeTable.file_stats`` output,
+    counting winner rows; the chunk-wide quarantine count and duration
+    ride row 0."""
+    return [
+        {
+            "batch_id": batch_id,
+            "source_partition": int(b),
+            "n_events": st["n_rows"],
+            "n_upserts": st["n_rows"] - st["n_deletes"],
+            "n_deletes": st["n_deletes"],
+            "n_quarantined": n_quarantined if i == 0 else 0,
+            "min_lsn": st["min_lsn"],
+            "max_lsn": st["max_lsn"],
+            "min_ts": st["min_ts"],
+            "max_ts": st["max_ts"],
+            "status": status,
+            "duration_ms": duration_ms if i == 0 else 0,
+        }
+        for i, (b, st) in enumerate(
+            sorted(per_bucket.items(), key=lambda kv: int(kv[0]))
+        )
+    ]
+
+
 class CdcApplier:
     def __init__(
         self,
@@ -82,17 +121,18 @@ class CdcApplier:
         dedup_method: str = "max_by",
         salt_buckets: int = 64,
         with_lineage: bool = True,
-        mode: str = "mor",
         compact_threshold: int | None = 16,
         validator=None,
     ):
-        """``mode='mor'`` (default) appends each chunk's deduped winners as a
-        merge-on-read delta layer — per chunk the table gains O(changed keys)
-        bytes, the at-scale write path (Iceberg v2 equality deletes; how
-        Flink's Iceberg upsert sink works). ``mode='cow'`` rewrites affected
-        buckets copy-on-write — read-optimised, O(bucket size) per chunk.
-        ``compact_threshold`` bounds MOR read amplification: replay compacts
-        any bucket whose delta layer count reaches it."""
+        """Each chunk's deduped winners append as a merge-on-read delta
+        layer — per chunk the table gains O(changed keys) bytes, the
+        at-scale write path (Iceberg v2 equality deletes; how Flink's
+        Iceberg upsert sink works). ``compact_threshold`` bounds read
+        amplification: replay and the streaming sink compact any bucket
+        whose delta layer count reaches it. ``compact_threshold=1`` is the
+        read-optimised setting — every affected bucket is compacted right
+        after its chunk, leaving no delta layers; ``None`` disables
+        auto-compaction."""
         self.spark = spark
         self.target = target
         self.lineage = lineage
@@ -101,7 +141,6 @@ class CdcApplier:
         self.dedup_method = dedup_method
         self.salt_buckets = salt_buckets
         self.with_lineage = with_lineage
-        self.mode = mode
         self.compact_threshold = compact_threshold
         self._lineage_buf: list[dict] = []
         self._metrics_buf: list[dict] = []
@@ -118,15 +157,6 @@ class CdcApplier:
         self.keys: list[str] = list(props.get("merge_keys", KEY_COLS))
         self.order: list[str] = list(props.get("order_cols", ORDER_COLS))
         self.merge_engine: str | None = props.get("merge_engine")
-        if (
-            self.merge_engine in ("partial_update", "aggregation", "first_row")
-            and mode != "mor"
-        ):
-            raise ValueError(
-                f"{self.merge_engine} tables apply merge-on-read only: "
-                "rows are resolved by the read fold; a copy-on-write "
-                "rewrite would need the same fold inline — use mode='mor'"
-            )
         if validator is not None:
             self._reason = validator
         elif self.merge_engine == "aggregation":
@@ -379,202 +409,97 @@ class CdcApplier:
         streaming passes ``epoch`` (micro-batch id) instead and ``hi=None``
         (derived from the batch's own max LSN). Skip rules give exactly-once:
         LSN-ranged chunks skip when hi <= committed LSN; epochs skip when
-        epoch <= committed epoch (foreachBatch redelivery)."""
+        epoch <= committed epoch (foreachBatch redelivery).
+
+        The chunk's delta files and offsets are published by ONE commit
+        (two-phase: :meth:`_write_chunk` -> ``commit_delta``), so a crash
+        between the phases leaves only an orphaned, never-referenced data
+        dir."""
         t0 = time.monotonic()
         stats = ChunkStats(batch_id=batch_id, lo=lo, hi=hi if hi is not None else -1)
+        w = self._write_chunk(chunk, hi, batch_id, epoch)
+        if w is None:
+            stats.skipped = True  # duplicate chunk / redelivered micro-batch
+            return stats
+        stats.n_events = w.n_events
+        stats.n_upserts = w.n_upserts
+        stats.n_deletes = w.n_deletes
+        stats.n_quarantined = w.n_quarantined
 
-        if epoch is not None:
-            if epoch <= self.target.snapshot().summary.get("epoch", -1):
-                stats.skipped = True  # redelivered micro-batch -> no-op
-                return stats
-        else:
-            committed = self.committed_lsn()
-            if committed is not None and hi is not None and hi <= committed:
-                stats.skipped = True  # duplicate chunk replay -> no-op
-                return stats
-
-        snap = self.target.snapshot()
-        if self.mode == "mor":
-            return self._apply_chunk_mor(
-                chunk, hi, batch_id, epoch, defer_lineage, snap, stats, t0
-            )
-        bucket_col = self.target.bucket_col()
-        ok = self._reason(chunk).isNull()
-        # ONE slim aggregate pass gives per-bucket metrics, quarantine
-        # counts AND the affected-bucket list (collect is <= bucket_count + 1
-        # rows, never data-sized). It reads only the five narrow columns
-        # (keys/op/lsn/ts) — parquet column pruning keeps it ~10% of the
-        # chunk's bytes, which measured CHEAPER than fusing it into the
-        # payload-wide winners aggregation and persisting that (the persist
-        # serializes full text payloads and cost more than this pass saves).
-        # Invalid rows group under their bucket too (hash of a NULL key is
-        # defined), so lineage attributes them.
-        valid, _ = self._split(chunk)
-        per_bucket = (
-            chunk.withColumn("_ok", ok)
-            .withColumn("_b", bucket_col)
-            .groupBy("_b")
-            .agg(
-                F.sum(F.col("_ok").cast("long")).alias("n_events"),
-                F.sum((F.col("_ok") & (F.col("op") != "D")).cast("long")).alias("n_upserts"),
-                F.sum((F.col("_ok") & (F.col("op") == "D")).cast("long")).alias("n_deletes"),
-                F.sum((~F.col("_ok")).cast("long")).alias("n_quarantined"),
-                F.min(F.when(F.col("_ok"), F.col("lsn"))).alias("min_lsn"),
-                F.max(F.when(F.col("_ok"), F.col("lsn"))).alias("max_lsn"),
-                F.min(F.when(F.col("_ok"), F.col("ts"))).alias("min_ts"),
-                F.max(F.when(F.col("_ok"), F.col("ts"))).alias("max_ts"),
-            )
-            .collect()
-        )
-        tp = _phase("metrics_agg", t0)
-        stats.n_quarantined = sum(r["n_quarantined"] for r in per_bucket)
-        per_bucket = [r for r in per_bucket if r["n_events"] > 0]
-        if not per_bucket:
+        if not w.new_files:
             # nothing valid in the chunk — still advance the offset so the
             # chunk is never replayed (metadata-only commit)
-            if stats.n_quarantined:
-                self._write_quarantine(self._split(chunk)[1], batch_id)
             self.target.commit_summary(
-                self._summary(snap, hi, batch_id, {}, epoch),
-                expected_parent=snap.snapshot_id,
+                w.summary, expected_parent=w.snap.snapshot_id
             )
             stats.duration_ms = int((time.monotonic() - t0) * 1000)
             return stats
 
-        affected = sorted(int(r["_b"]) for r in per_bucket)
+        affected = sorted(int(b) for b in w.new_files)
         stats.affected_buckets = affected
-        stats.n_events = sum(r["n_events"] for r in per_bucket)
-        stats.n_upserts = sum(r["n_upserts"] for r in per_bucket)
-        stats.n_deletes = sum(r["n_deletes"] for r in per_bucket)
-
         if hi is None:  # streaming: offsets derived from the batch itself
-            hi = max(int(r["max_lsn"]) for r in per_bucket)
-            stats.hi = hi
-        # keyed off each row's own bucket id — collect() order is arbitrary,
-        # so zipping against the sorted bucket list would misattribute stats
-        per_part = {str(int(r["_b"])): int(r["max_lsn"]) for r in per_bucket}
-        summary = self._summary(snap, hi, batch_id, per_part, epoch)
-        existing = [f.name for f in snap.schema.fields]
-
-        # LWW winners of this chunk, one row per key, still carrying op
-        # ('D' winners are delete tombstones). max_by plans as a partial
-        # aggregation — duplicate deliveries collapse map-side, before the
-        # shuffle.
-        winners = lww_dedup(
-            valid,
-            keys=self.keys,
-            order=self.order,
-            method=self.dedup_method,
-            salt_buckets=self.salt_buckets,
-        )
-
-        # --- copy-on-write merge: union the chunk's winners with the
-        # affected target rows and run ONE LWW aggregation over both.
-        # Two exchanges per chunk: hash(conv_id, turn_idx) for the
-        # aggregate, then hash(bucket) to cluster the write.
-        # Existing rows come back WITH their tombstones (keep_tombstones):
-        # a delete that already won must keep guarding its key against
-        # stale pre-delete events in this and every later chunk, so 'D'
-        # winners are written back to the base (filtered at read; GC'd
-        # only by the explicit expire_tombstones horizon).
-        current = self.target.read(
-            buckets=affected, keep_tombstones=True
-        ).withColumn("op", F.coalesce(F.col("op"), F.lit("K")))
-        united = current.unionByName(winners, allowMissingColumns=True)
-        resolved = lww_dedup(
-            united,
-            keys=self.keys,
-            order=self.order,
-            method=self.dedup_method,
-            salt_buckets=self.salt_buckets,
-        )
-        merged = resolved.withColumn(
-            "op",
-            F.when(F.col("op") == "D", F.lit("D")).otherwise(
-                F.lit(None).cast("string")
-            ),
-        )
-
-        # column order: existing schema first, additive columns appended,
-        # the reserved tombstone marker last (kept in data files only)
-        new_cols = [c for c in merged.columns if c not in existing and c != "op"]
-        merged = merged.select(*existing, *new_cols, "op")
-
-        # Quarantine is written BEFORE the offset-advancing commit (same
-        # ordering as _apply_chunk_mor): a crash between the two re-applies
-        # the chunk (idempotent) instead of silently losing the rejected
-        # rows — the reverse order would skip the chunk on replay and the
-        # quarantined events would be gone.
-        if stats.n_quarantined:
-            self._write_quarantine(self._split(chunk)[1], batch_id)
-            tp = _phase("quarantine", tp)
-
-        new_snap = self.target.replace_buckets(
-            merged,
-            affected,
-            summary=summary,
-            sort_cols=self.keys,
-            expected_parent=snap.snapshot_id,
-            props_update=(
-                {"base_tombstones": True}
-                if stats.n_deletes or snap.props.get("base_tombstones")
-                else None
-            ),
+            stats.hi = w.hi
+        new_snap = self.target.commit_delta(
+            w.new_files, w.schema, w.summary, expected_parent=w.snap.snapshot_id
         )
         stats.snapshot_id = new_snap.snapshot_id
-        tp = _phase("merge_write", tp)
         stats.duration_ms = int((time.monotonic() - t0) * 1000)
 
-        if self.with_lineage and self.lineage is not None:
-            rows = [
+        # winner-level lineage counts (rows materialized per bucket);
+        # chunk-level event counts live in the metrics table
+        self._record_lineage(
+            _lineage_rows(batch_id, w.per_bucket, "ok",
+                          stats.n_quarantined, stats.duration_ms),
+            defer_lineage,
+        )
+        if self.metrics is not None:
+            self._metrics_buf.append(
                 {
                     "batch_id": batch_id,
-                    "source_partition": int(r["_b"]),
-                    "n_events": r["n_events"],
-                    "n_upserts": r["n_upserts"],
-                    "n_deletes": r["n_deletes"],
-                    "n_quarantined": r["n_quarantined"],
-                    "min_lsn": r["min_lsn"],
-                    "max_lsn": r["max_lsn"],
-                    "min_ts": r["min_ts"],
-                    "max_ts": r["max_ts"],
-                    "status": "ok",
-                    "duration_ms": stats.duration_ms if i == 0 else 0,
+                    "epoch": epoch,
+                    "hi_lsn": w.hi,
+                    "n_events": stats.n_events,
+                    "n_upserts": stats.n_upserts,
+                    "n_deletes": stats.n_deletes,
+                    "n_quarantined": stats.n_quarantined,
+                    "n_winner_rows": sum(st["n_rows"] for st in w.per_bucket.values()),
+                    "n_affected_buckets": len(affected),
+                    "duration_ms": stats.duration_ms,
                 }
-                for i, r in enumerate(per_bucket)
-            ]
-            if defer_lineage:
-                # replay batches many chunks' rows into ONE lineage commit —
-                # fewer control-table commits and files per replay (one
-                # per chunk would scale with chunk count, not data)
-                self._lineage_buf.extend(rows)
-            else:
-                self.lineage.append_rows(rows, summary={"batch_id": batch_id})
-            _phase("lineage", tp)
+            )
+            if not defer_lineage:
+                self.flush_metrics()
         return stats
 
-    # ------------------------------------------------------- MOR fused path
-    def _apply_chunk_mor(
+    def _write_chunk(
         self,
         chunk: DataFrame,
         hi: int | None,
-        batch_id: int,
+        batch_id: int | None,
         epoch: int | None,
-        defer_lineage: bool,
-        snap: Any,
-        stats: ChunkStats,
-        t0: float,
-    ) -> ChunkStats:
-        """Merge-on-read apply with a FUSED metrics pass: the chunk is
-        scanned exactly once. Validation counters and the offset watermark
-        ride the winners-write job as an ``Observation`` (zero extra scan,
-        zero extra job); per-bucket lineage stats come from a narrow
-        read-back of the just-written — still uncommitted — delta files
-        (O(changed keys) rows, not O(chunk)). The commit then publishes
-        files + offsets atomically (two-phase: write_delta_files ->
-        commit_delta), so a crash between the phases leaves only an
-        orphaned, never-referenced data dir."""
+    ) -> _ChunkWrite | None:
+        """The write half shared by :meth:`apply_chunk` and
+        :meth:`stage_chunk`: skip check, then the chunk's delta files
+        written but NOT committed, their per-bucket footer stats, the
+        offsets summary the commit will carry, and the chunk's quarantine
+        rows. Returns None when the chunk is already committed.
+
+        The chunk is scanned exactly once: validation counters and the
+        offset watermark ride the winners-write job as an ``Observation``
+        (zero extra scan, zero extra job); per-bucket stats come from the
+        written files' parquet footers (driver-side, no Spark job)."""
         from pyspark.sql import Observation
+
+        snap = self.target.snapshot()
+        if epoch is not None:  # streaming: redelivered micro-batch -> no-op
+            if epoch <= snap.summary.get("epoch", -1):
+                return None
+        else:
+            committed = snap.summary.get("offsets", {}).get("last_lsn")
+            if committed is not None and hi is not None and hi <= committed:
+                return None
+        if batch_id is None:
+            batch_id = int(snap.summary.get("batch_id", -1)) + 1
 
         tagged = chunk.withColumn("_reason", self._reason(chunk))
         ok = F.col("_reason").isNull()
@@ -614,7 +539,7 @@ class CdcApplier:
         # table's buckets use the same murmur3 hash (co_partitioned_write_ok)
         # the winners are ALREADY clustered by bucket and the write skips
         # its repartition — one full-payload shuffle per chunk, not two
-        commit_dir, new_files = self.target.write_delta_files(
+        _, new_files = self.target.write_delta_files(
             winners, sort_cols=self.keys,
             # patch chunks union two branches (full-write winners + patch
             # rows) — partitioning is not the single clean aggregate
@@ -623,35 +548,13 @@ class CdcApplier:
                              and self.target.co_partitioned_write_ok(self.keys)),
         )
         m = obs.get  # populated by the write action above
-        tp = _phase("winners_write", t0)
-        stats.n_events = int(m["n_events"] or 0)
-        stats.n_upserts = int(m["n_upserts"] or 0)
-        stats.n_deletes = int(m["n_deletes"] or 0)
-        stats.n_quarantined = int(m["n_quarantined"] or 0)
-
-        if not new_files:
-            # nothing valid in the chunk — still advance the offset so the
-            # chunk is never replayed (metadata-only commit)
-            if stats.n_quarantined:
-                self._write_quarantine(self._split(chunk)[1], batch_id)
-            self.target.commit_summary(
-                self._summary(snap, hi, batch_id, {}, epoch),
-                expected_parent=snap.snapshot_id,
-            )
-            stats.duration_ms = int((time.monotonic() - t0) * 1000)
-            return stats
-
-        affected = sorted(int(b) for b in new_files)
-        stats.affected_buckets = affected
-        if hi is None:  # streaming: offsets derived from the batch itself
+        if hi is None and m["max_lsn"] is not None:
             hi = int(m["max_lsn"])
-            stats.hi = hi
 
-        # per-bucket stats from parquet footers (driver-side, ~1 ms/file —
-        # no Spark job, no scan): row counts, exact lsn/ts min/max, and the
-        # delete count via the _del null-count trick
+        # per-bucket stats from parquet footers (~1 ms/file): row counts,
+        # exact lsn/ts min/max, and the delete count via the _del
+        # null-count trick
         per_bucket = self.target.file_stats(new_files)
-        tp = _phase("bucket_stats", tp)
         # Footer stats cover WINNER rows only; LWW orders by (ts, lsn), so a
         # high-lsn/older-ts loser can leave the footer max below the lsn
         # actually consumed. per_partition is therefore informational (it is
@@ -667,66 +570,37 @@ class CdcApplier:
                 "buckets; per-partition watermarks fell back to chunk hi",
                 file=sys.stderr,
             )
-        summary = self._summary(snap, hi, batch_id, per_part, epoch)
-
-        # Quarantine is written BEFORE the offset-advancing commit: a crash
-        # between the two re-applies the chunk (idempotent) instead of
-        # silently losing the rejected rows (the reverse order would skip
-        # the chunk on replay and the quarantined events would be gone).
-        if stats.n_quarantined:
-            self._write_quarantine(self._split(chunk)[1], batch_id)
-            tp = _phase("quarantine", tp)
-
-        new_snap = self.target.commit_delta(
-            new_files, winners.schema, summary, expected_parent=snap.snapshot_id
+        w = _ChunkWrite(
+            snap=snap, batch_id=batch_id, hi=hi,
+            n_events=int(m["n_events"] or 0),
+            n_upserts=int(m["n_upserts"] or 0),
+            n_deletes=int(m["n_deletes"] or 0),
+            n_quarantined=int(m["n_quarantined"] or 0),
+            new_files=new_files, schema=winners.schema, per_bucket=per_bucket,
+            summary=self._summary(snap, hi, batch_id, per_part, epoch),
         )
-        stats.snapshot_id = new_snap.snapshot_id
-        stats.duration_ms = int((time.monotonic() - t0) * 1000)
+        # Quarantine is written BEFORE the offset-advancing commit or
+        # stage: a crash between the two re-applies the chunk (idempotent)
+        # instead of silently losing the rejected rows (the reverse order
+        # would skip the chunk on replay and the quarantined events would
+        # be gone).
+        if w.n_quarantined:
+            self._write_quarantine(self._split(chunk)[1], batch_id)
+        return w
 
-        if self.with_lineage and self.lineage is not None:
-            rows = [
-                {
-                    "batch_id": batch_id,
-                    "source_partition": int(b),
-                    # winner-level counts (rows materialized per bucket);
-                    # chunk-level event counts live in the metrics table.
-                    # Global quarantine count rides row 0.
-                    "n_events": st["n_rows"],
-                    "n_upserts": st["n_rows"] - st["n_deletes"],
-                    "n_deletes": st["n_deletes"],
-                    "n_quarantined": stats.n_quarantined if i == 0 else 0,
-                    "min_lsn": st["min_lsn"],
-                    "max_lsn": st["max_lsn"],
-                    "min_ts": st["min_ts"],
-                    "max_ts": st["max_ts"],
-                    "status": "ok",
-                    "duration_ms": stats.duration_ms if i == 0 else 0,
-                }
-                for i, (b, st) in enumerate(sorted(per_bucket.items(), key=lambda kv: int(kv[0])))
-            ]
-            if defer_lineage:
-                self._lineage_buf.extend(rows)
-            else:
-                self.lineage.append_rows(rows, summary={"batch_id": batch_id})
-            _phase("lineage", tp)
-        if self.metrics is not None:
-            self._metrics_buf.append(
-                {
-                    "batch_id": batch_id,
-                    "epoch": epoch,
-                    "hi_lsn": hi,
-                    "n_events": stats.n_events,
-                    "n_upserts": stats.n_upserts,
-                    "n_deletes": stats.n_deletes,
-                    "n_quarantined": stats.n_quarantined,
-                    "n_winner_rows": sum(st["n_rows"] for st in per_bucket.values()),
-                    "n_affected_buckets": len(affected),
-                    "duration_ms": stats.duration_ms,
-                }
+    def _record_lineage(self, rows: list[dict], defer: bool = False) -> None:
+        """Append lineage rows now, or buffer them for :meth:`flush_lineage`
+        — replay batches many chunks' rows into ONE lineage commit (one
+        per chunk would scale control-table commits and files with chunk
+        count, not data)."""
+        if not rows or not self.with_lineage or self.lineage is None:
+            return
+        if defer:
+            self._lineage_buf.extend(rows)
+        else:
+            self.lineage.append_rows(
+                rows, summary={"batch_id": rows[0]["batch_id"]}
             )
-            if not defer_lineage:
-                self.flush_metrics()
-        return stats
 
     def flush_lineage(self) -> None:
         """Write any buffered lineage + metrics rows, one append commit
@@ -759,7 +633,7 @@ class CdcApplier:
         prev = prev_snap.summary.get("offsets", {})
         # max-merge so per-bucket watermarks never move backwards across
         # chunks (footer-derived values reflect winner rows, not every
-        # consumed event — see _apply_chunk_mor). Informational only;
+        # consumed event — see _write_chunk). Informational only;
         # resume is driven exclusively by last_lsn.
         merged_pp = dict(prev.get("per_partition", {}))
         for b, v in per_partition.items():
@@ -933,7 +807,7 @@ class CdcApplier:
         epoch: int | None = None,
     ) -> dict[str, Any]:
         """WAP ingest (Iceberg ``wap.id`` workflow): validate + LWW-dedup
-        the chunk exactly like the MOR apply path, but STAGE the winner
+        the chunk exactly like :meth:`apply_chunk`, but STAGE the winner
         delta layer instead of committing it — readers cannot see it, and
         ``committed_lsn()`` is unchanged. The offsets the chunk would
         commit ride the staged summary and become visible atomically with
@@ -945,71 +819,19 @@ class CdcApplier:
         Reference analogue: files wait in wip/ until the checker passes
         before moving into the indexed hierarchy; here the "move" is one
         atomic snapshot flip over audited bytes."""
-        from pyspark.sql import Observation
-
-        if self.mode != "mor":
-            raise ValueError("stage_chunk requires mode='mor' (delta staging)")
-        snap = self.target.snapshot()
-        if batch_id is None:
-            batch_id = int(snap.summary.get("batch_id", -1)) + 1
-        if epoch is not None:  # streaming: redelivered micro-batch -> no-op
-            if epoch <= snap.summary.get("epoch", -1):
-                return {"wap_id": wap_id, "skipped": True}
-        else:
-            committed = self.committed_lsn()
-            if committed is not None and hi is not None and hi <= committed:
-                return {"wap_id": wap_id, "skipped": True}
-
-        tagged = chunk.withColumn("_reason", self._reason(chunk))
-        ok = F.col("_reason").isNull()
-        obs = Observation()
-        tagged = tagged.observe(
-            obs,
-            F.sum(ok.cast("long")).alias("n_events"),
-            F.sum((~ok).cast("long")).alias("n_quarantined"),
-            F.max(F.when(ok, F.col("lsn"))).alias("max_lsn"),
-        )
-        valid = tagged.where(F.col("_reason").isNull()).drop("_reason")
-        winners = self._chunk_rows(valid)
-        existing = [f.name for f in snap.schema.fields]
-        cols = (
-            [c for c in existing if c in winners.columns]
-            + [c for c in winners.columns if c not in existing and c != "op"]
-            + ["op"]
-        )
-        winners = winners.select(cols).withColumn(
-            "_del", F.when(F.col("op") == "D", F.lit(1))
-        )
-        _, new_files = self.target.write_delta_files(
-            winners, sort_cols=self.keys,
-            # patch chunks union two branches (full-write winners + patch
-            # rows) — partitioning is not the single clean aggregate
-            # output the fast path asserts
-            pre_partitioned=(self.merge_engine != "partial_update"
-                             and self.target.co_partitioned_write_ok(self.keys)),
-        )
-        m = obs.get  # populated by the write action above
-        if hi is None and m["max_lsn"] is not None:
-            hi = int(m["max_lsn"])
-        per_bucket = self.target.file_stats(new_files)
-        per_part = {
-            b: int(st["max_lsn"]) if st["max_lsn"] is not None else int(hi)
-            for b, st in per_bucket.items()
-            if st["max_lsn"] is not None or hi is not None
-        }
-        summary = self._summary(snap, hi, batch_id, per_part, epoch)
-        if int(m["n_quarantined"] or 0):
-            self._write_quarantine(self._split(chunk)[1], batch_id)
-        man = self.target.stage_files(new_files, winners.schema, wap_id, summary)
+        w = self._write_chunk(chunk, hi, batch_id, epoch)
+        if w is None:
+            return {"wap_id": wap_id, "skipped": True}
+        man = self.target.stage_files(w.new_files, w.schema, wap_id, w.summary)
         return {
             "wap_id": wap_id,
             "skipped": False,
             "base_id": man["base_id"],
-            "batch_id": batch_id,
-            "hi": hi,
-            "n_events": int(m["n_events"] or 0),
-            "n_quarantined": int(m["n_quarantined"] or 0),
-            "staged_files": sum(len(fs) for fs in new_files.values()),
+            "batch_id": w.batch_id,
+            "hi": w.hi,
+            "n_events": w.n_events,
+            "n_quarantined": w.n_quarantined,
+            "staged_files": sum(len(fs) for fs in w.new_files.values()),
         }
 
     def audit_staged(
@@ -1040,25 +862,7 @@ class CdcApplier:
         )
         snap = self.target.publish_staged(wap_id)
         batch_id = int(man.get("summary", {}).get("batch_id", -1))
-        if self.with_lineage and self.lineage is not None and per_bucket:
-            rows = [
-                {
-                    "batch_id": batch_id,
-                    "source_partition": int(b),
-                    "n_events": st["n_rows"],
-                    "n_upserts": st["n_rows"] - st["n_deletes"],
-                    "n_deletes": st["n_deletes"],
-                    "n_quarantined": 0,
-                    "min_lsn": st["min_lsn"],
-                    "max_lsn": st["max_lsn"],
-                    "min_ts": st["min_ts"],
-                    "max_ts": st["max_ts"],
-                    "status": "wap_published",
-                    "duration_ms": 0,
-                }
-                for b, st in sorted(per_bucket.items(), key=lambda kv: int(kv[0]))
-            ]
-            self.lineage.append_rows(rows, summary={"batch_id": batch_id})
+        self._record_lineage(_lineage_rows(batch_id, per_bucket, "wap_published"))
         return snap.snapshot_id
 
     def abandon_chunk(self, wap_id: str) -> int:
@@ -1069,18 +873,16 @@ class CdcApplier:
         man = self.target.staged_manifest(wap_id)
         n = self.target.abandon_staged(wap_id)
         batch_id = int(man.get("summary", {}).get("batch_id", -1))
-        if self.with_lineage and self.lineage is not None:
-            row = [{
-                "batch_id": batch_id,
-                "source_partition": -1,
-                "n_events": 0, "n_upserts": 0, "n_deletes": 0,
-                "n_quarantined": 0,
-                "min_lsn": None, "max_lsn": None,
-                "min_ts": None, "max_ts": None,
-                "status": "wap_abandoned",
-                "duration_ms": 0,
-            }]
-            self.lineage.append_rows(row, summary={"batch_id": batch_id})
+        self._record_lineage([{
+            "batch_id": batch_id,
+            "source_partition": -1,
+            "n_events": 0, "n_upserts": 0, "n_deletes": 0,
+            "n_quarantined": 0,
+            "min_lsn": None, "max_lsn": None,
+            "min_ts": None, "max_ts": None,
+            "status": "wap_abandoned",
+            "duration_ms": 0,
+        }])
         return n
 
     # ---------------------------------------------------------------- replay
@@ -1133,9 +935,7 @@ class CdcApplier:
             )
             self.maybe_compact()
         if compact_at_end:
-            tc = time.monotonic()
             self.target.compact()
-            _phase("compact_end", tc)
         self.flush_lineage()
         return out
 
@@ -1172,6 +972,4 @@ class CdcApplier:
             if len(fs) >= self.compact_threshold
         ]
         if hot:
-            tc = time.monotonic()
             self.target.compact(buckets=hot)
-            _phase("compact_auto", tc)

@@ -98,8 +98,8 @@ class CdcRouter:
         **applier_kwargs: Any,
     ) -> "CdcRouter":
         """Create one ``CdcApplier`` universe per spec under
-        ``root/<name>/``. ``applier_kwargs`` (mode, dedup_method, ...)
-        apply to every table."""
+        ``root/<name>/``. ``applier_kwargs`` (dedup_method,
+        compact_threshold, ...) apply to every table."""
         appliers = {
             name: CdcApplier.bootstrap_custom(
                 spark,

@@ -30,7 +30,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--events", type=int, default=2_000_000)
     ap.add_argument("--chunks", type=int, default=2)
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--apply-mode", default="mor", choices=["mor", "cow"])
     ap.add_argument("--repeats", type=int, default=6,
                     help="max in-JVM replay reps (stops early once converged)")
     ap.add_argument("--no-compact-end", action="store_true",
@@ -106,9 +105,7 @@ def main(argv: list[str] | None = None) -> int:
             nonlocal best
             workdir = f"{args.workdir}_r{rep}"
             shutil.rmtree(workdir, ignore_errors=True)
-            applier = CdcApplier.bootstrap(
-                spark, workdir, bucket_count=args.buckets, mode=args.apply_mode
-            )
+            applier = CdcApplier.bootstrap(spark, workdir, bucket_count=args.buckets)
             # Apply loop and maintenance compaction are timed SEPARATELY —
             # the north-star metric is change-events/sec applied (replay ->
             # committed upsert); compaction is amortized maintenance that
@@ -259,7 +256,7 @@ def main(argv: list[str] | None = None) -> int:
                 shutil.rmtree(workdir, ignore_errors=True)
                 applier = CdcApplier.bootstrap(
                     spark, workdir, bucket_count=args.buckets,
-                    mode=args.apply_mode, dedup_method=method,
+                    dedup_method=method,
                 )
                 t0 = time.monotonic()
                 stats = applier.replay(

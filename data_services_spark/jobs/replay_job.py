@@ -50,12 +50,10 @@ def main(argv: list[str] | None = None) -> int:
                          "its non-null columns); first_row keeps each key's "
                          "FIRST event (deletes quarantine); loading an "
                          "existing table keeps its own engine")
-    ap.add_argument("--apply-mode", default="mor", choices=["mor", "cow"],
-                    help="mor: append delta layers (write-optimised, at-scale"
-                         " default); cow: rewrite affected buckets")
     ap.add_argument("--compact-threshold", type=int, default=16,
                     help="compact a bucket when its delta layer count reaches"
-                         " this (0 disables auto-compaction)")
+                         " this (1 compacts after every chunk, leaving the"
+                         " table read-optimised; 0 disables auto-compaction)")
     ap.add_argument("--compact-at-end", action="store_true",
                     help="leave the table fully read-optimised after replay")
     ap.add_argument("--branch", default=None, metavar="NAME",
@@ -104,7 +102,6 @@ def main(argv: list[str] | None = None) -> int:
 
     kwargs = dict(
         dedup_method=args.dedup_method, with_lineage=not args.no_lineage,
-        mode=args.apply_mode,
         compact_threshold=args.compact_threshold or None,
     )
     if args.branch:

@@ -190,15 +190,18 @@ def export_delta_log(
         f.write("\n".join(lines) + "\n")
         f.flush()
         os.fsync(f.fileno())
-    # O_EXCL-style arbitration: version files are immutable once named
+    # O_EXCL claim: version files are immutable once named, so a
+    # concurrent exporter that claimed this version first wins
     target = os.path.join(log_dir, f"{version:020d}.json")
-    if os.path.exists(target):
-        os.remove(tmp)
+    try:
+        os.link(tmp, target)
+    except FileExistsError:
         raise FileExistsError(
             f"delta log version {version} already exists (concurrent "
             "export); re-run to diff against it"
-        )
-    os.replace(tmp, target)
+        ) from None
+    finally:
+        os.remove(tmp)
     return {"version": version, "n_add": len(adds),
             "n_remove": len(removes), "log_dir": log_dir}
 

@@ -189,13 +189,6 @@ def test_expire_tombstones_refuses_aggregation_tables(spark, tmp_path):
         applier.target.expire_tombstones()
 
 
-def test_cow_mode_rejected(spark, tmp_path):
-    _agg_applier(spark, tmp_path)  # create tables
-    target = LakeTable(spark, str(tmp_path / "lake" / "target"))
-    with pytest.raises(ValueError, match="merge-on-read only"):
-        CdcApplier(spark, target, mode="cow")
-
-
 def test_rebucket_preserves_aggregation_state(spark, tmp_path):
     stream = _stream(spark, ROWS)
     applier = _agg_applier(spark, tmp_path)

@@ -308,9 +308,10 @@ def _jobs_in_group(spark, group, fn):
 def test_streaming_chunk_commit_starts_only_winner_write_jobs(spark, tmp_path):
     """A streaming-style chunk commit (``apply_chunk(epoch=e)`` then
     ``maybe_compact``) starts only the winner write's Spark jobs: its
-    lineage and metrics rows are written driver-side. WAP publish and
-    abandon start none. Counted jobs, not timings: host noise cannot
-    move this guard."""
+    lineage and metrics rows are written driver-side. WAP staging shares
+    the apply's write prefix, so ``stage_chunk`` starts the same jobs;
+    WAP publish and abandon start none. Counted jobs, not timings: host
+    noise cannot move this guard."""
     src = str(tmp_path / "changes.parquet")
     generate_changes(
         spark, 1500, n_convs=80, max_turns=10, seed=5
@@ -335,7 +336,12 @@ def test_streaming_chunk_commit_starts_only_winner_write_jobs(spark, tmp_path):
     assert [(r["epoch"], r["n_events"]) for r in met] == [(0, stats.n_events)]
 
     rest = changes.where(F.col("lsn") >= 1000)
-    applier.stage_chunk(rest, "w1", epoch=1, batch_id=1)
+    staged, n_stage = _jobs_in_group(
+        spark, "stage",
+        lambda: applier.stage_chunk(rest, "w1", epoch=1, batch_id=1),
+    )
+    assert not staged["skipped"] and staged["n_quarantined"] == 0
+    assert n_stage == n_jobs, n_stage
     _, n_pub = _jobs_in_group(
         spark, "publish", lambda: applier.publish_chunk("w1")
     )

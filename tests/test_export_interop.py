@@ -129,3 +129,49 @@ def test_snapshot_parquet_export(spark, lake, tmp_path):
     eng = applier.target.read().toPandas()
     ok, msg = table_state_matches(got, eng)
     assert ok, msg
+
+
+def test_delta_log_version_claim_is_atomic(spark, tmp_path, monkeypatch):
+    """A concurrent exporter that claims version N after this one listed
+    the log (and checked for N) must make this export fail, never be
+    silently overwritten."""
+    from pyspark.sql import types as T
+
+    from data_services_spark.lake import export
+    from data_services_spark.lake.table import LakeTable
+
+    schema = T.StructType([
+        T.StructField("k", T.IntegerType(), False),
+        T.StructField("v", T.StringType(), True),
+    ])
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema, ["k"], 2)
+    t.append_rows([{"k": 1, "v": "a"}, {"k": 2, "v": "b"}])
+    assert export_delta_log(t)["version"] == 0
+    t.append_rows([{"k": 3, "v": "c"}])
+
+    log_dir = os.path.join(t.path, "_delta_log")
+    target = os.path.join(log_dir, f"{1:020d}.json")
+    racer = b'{"commitInfo": {"engineInfo": "racer"}}\n'
+    with open(target, "wb") as f:
+        f.write(racer)
+    # the racer's version landed after this exporter listed the log ...
+    listed = export._log_versions
+    monkeypatch.setattr(
+        export, "_log_versions", lambda d: [v for v in listed(d) if v != 1]
+    )
+    # ... and after any existence check it makes on the target
+    real_exists = os.path.exists
+    misses = [target]
+
+    def stale_exists(p):
+        if p in misses:
+            misses.remove(p)
+            return False
+        return real_exists(p)
+
+    monkeypatch.setattr(export.os.path, "exists", stale_exists)
+    with pytest.raises(FileExistsError):
+        export_delta_log(t)
+    with open(target, "rb") as f:
+        assert f.read() == racer
+    assert not [n for n in os.listdir(log_dir) if n.endswith(".tmp")]

@@ -45,10 +45,10 @@ def _stream(spark, rows):
     return spark.createDataFrame(data, CHANGE_DDL)
 
 
-def _applier(spark, tmp_path, name="lake_fr", **kwargs):
+def _applier(spark, tmp_path):
     return CdcApplier.bootstrap(
-        spark, str(tmp_path / name), bucket_count=4,
-        target_props={"merge_engine": "first_row"}, **kwargs,
+        spark, str(tmp_path / "lake_fr"), bucket_count=4,
+        target_props={"merge_engine": "first_row"},
     )
 
 
@@ -143,8 +143,6 @@ def test_deletes_quarantined_with_reason(spark, tmp_path):
 
 
 def test_guards(spark, tmp_path):
-    with pytest.raises(ValueError, match="merge-on-read only"):
-        _applier(spark, tmp_path, name="lake_cow", mode="cow")
     a = _applier(spark, tmp_path)
     a.replay(_stream(spark, [(1, "I", 1, "a", 0, "x")]), chunk_size=10)
     with pytest.raises(ValueError, match="first_row table"):

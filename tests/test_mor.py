@@ -1,14 +1,16 @@
 """Merge-on-read (delta-layer) semantics of the lake table + apply loop.
 
-The MOR write path is the engine's at-scale answer to copy-on-write's
-O(table x chunks) rewrite cost (Iceberg v2 equality-delete analogue; same
-shape as Flink's Iceberg upsert sink). These tests pin down:
+The MOR write path is the engine's one apply path — its at-scale answer
+to copy-on-write's O(table x chunks) rewrite cost (Iceberg v2
+equality-delete analogue; same shape as Flink's Iceberg upsert sink).
+These tests pin down:
 
 * delta layers accumulate without touching base files;
 * reads resolve LWW across base + deltas, dropping op='D' tombstones;
 * compaction materialises the same state and carries offsets forward;
 * threshold auto-compaction bounds layer counts during replay;
-* MOR and COW replays of the same stream produce identical final state.
+* ``compact_threshold=1`` is copy-on-write: no delta layer survives any
+  chunk, and the final state equals a compact-at-end replay's.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ def changes_path(spark, tmp_path_factory):
 
 def test_delta_layers_accumulate_then_read_resolves(spark, changes_path, tmp_path):
     applier = CdcApplier.bootstrap(
-        spark, str(tmp_path / "lake"), bucket_count=8, mode="mor",
+        spark, str(tmp_path / "lake"), bucket_count=8,
         compact_threshold=None,
     )
     changes = spark.read.parquet(changes_path)
@@ -51,7 +53,7 @@ def test_delta_layers_accumulate_then_read_resolves(spark, changes_path, tmp_pat
 
 def test_compaction_preserves_state_and_offsets(spark, changes_path, tmp_path):
     applier = CdcApplier.bootstrap(
-        spark, str(tmp_path / "lake"), bucket_count=8, mode="mor",
+        spark, str(tmp_path / "lake"), bucket_count=8,
         compact_threshold=None,
     )
     changes = spark.read.parquet(changes_path)
@@ -72,7 +74,7 @@ def test_compaction_preserves_state_and_offsets(spark, changes_path, tmp_path):
 
 def test_threshold_auto_compaction_bounds_layers(spark, changes_path, tmp_path):
     applier = CdcApplier.bootstrap(
-        spark, str(tmp_path / "lake"), bucket_count=4, mode="mor",
+        spark, str(tmp_path / "lake"), bucket_count=4,
         compact_threshold=2,
     )
     changes = spark.read.parquet(changes_path)
@@ -87,11 +89,30 @@ def test_threshold_auto_compaction_bounds_layers(spark, changes_path, tmp_path):
 
 
 def test_mor_equals_cow_final_state(spark, changes_path, tmp_path):
+    """Copy-on-write is ``compact_threshold=1``: every affected bucket is
+    rewritten right after its chunk (delta depth 0 after every chunk), and
+    the final state equals a compact-at-end replay's and the oracle's."""
     changes = spark.read.parquet(changes_path)
-    mor = CdcApplier.bootstrap(spark, str(tmp_path / "mor"), bucket_count=8, mode="mor")
-    cow = CdcApplier.bootstrap(spark, str(tmp_path / "cow"), bucket_count=8, mode="cow")
-    mor.replay(changes, chunk_size=2500, compact_at_end=True)
-    cow.replay(changes, chunk_size=2500)
+    mor = CdcApplier.bootstrap(spark, str(tmp_path / "mor"), bucket_count=8)
+    cow = CdcApplier.bootstrap(
+        spark, str(tmp_path / "cow"), bucket_count=8, compact_threshold=1
+    )
+    depths = []
+    compact_chunk = cow.maybe_compact
+
+    def compact_and_probe():
+        compact_chunk()
+        snap = cow.target.snapshot()
+        depths.append(max(map(len, snap.delta_files.values()), default=0))
+
+    cow.maybe_compact = compact_and_probe
+    mor.replay(changes, chunk_size=1000, compact_at_end=True)
+    cow.replay(changes, chunk_size=1000)
+    assert depths == [0] * 6, depths
+    expected = expected_final_state(changes_path)
+    for applier in (mor, cow):
+        ok, msg = table_state_matches(applier.target.read().toPandas(), expected)
+        assert ok, msg
     ok, msg = table_state_matches(
         mor.target.read().toPandas(), cow.target.read().toPandas()
     )
@@ -119,7 +140,7 @@ def test_delete_then_reinsert_across_layers(spark, tmp_path):
     df = spark.createDataFrame(rows, CHANGES_SCHEMA)
 
     applier = CdcApplier.bootstrap(
-        spark, str(tmp_path / "lake"), bucket_count=4, mode="mor",
+        spark, str(tmp_path / "lake"), bucket_count=4,
         compact_threshold=None,
     )
     # one event per chunk -> 5 delta layers, maximal layering
@@ -164,7 +185,7 @@ def test_local_and_shuffle_compaction_identical(spark, changes_path, tmp_path):
     for strategy in ("local", "shuffle"):
         applier = CdcApplier.bootstrap(
             spark, str(tmp_path / f"lake_{strategy}"), bucket_count=8,
-            mode="mor", compact_threshold=None,
+            compact_threshold=None,
         )
         applier.replay(changes, chunk_size=2000)
         applier.target.compact(strategy=strategy)

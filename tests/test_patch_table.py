@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_services_spark.cdc.apply import CdcApplier
@@ -188,14 +187,6 @@ def test_changes_between_on_patch_table(spark, tmp_path):
     ch = applier.target.changes_between(s1).collect()
     assert len(ch) == 1 and ch[0]["op"] == "U" and ch[0]["text"] == "t5"
     assert "_wr" not in applier.target.changes_between(s1).columns
-
-
-def test_cow_mode_refused(spark, tmp_path):
-    with pytest.raises(ValueError, match="merge-on-read only"):
-        CdcApplier.bootstrap(
-            spark, str(tmp_path / "lake"), bucket_count=4, mode="cow",
-            target_props={"merge_engine": "partial_update"},
-        )
 
 
 def test_streaming_patch_ingest(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Delete-tombstone durability: a delete must keep winning against stale
 (older event-time) out-of-order events across EVERY maintenance rewrite —
-compaction (both strategies), copy-on-write merges, and rebucket. GC of
+compaction (both strategies, including the per-chunk compaction of
+``compact_threshold=1``), copy-on-write merges, and rebucket. GC of
 that memory is only the explicit ``expire_tombstones`` horizon declaration
 (Cassandra gc_grace / Iceberg delete-expiry analogue).
 
@@ -49,23 +50,27 @@ def _keys(applier):
             for r in applier.target.read().collect()}
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_stale_event_after_compaction_stays_dead(spark, tmp_path, mode):
-    a = CdcApplier.bootstrap(spark, str(tmp_path / mode), bucket_count=4, mode=mode)
+# threshold 1 compacts every chunk's buckets: the copy-on-write behaviour
+@pytest.mark.parametrize("compact_threshold", [16, 1], ids=["mor", "cow"])
+def test_stale_event_after_compaction_stays_dead(spark, tmp_path, compact_threshold):
+    a = CdcApplier.bootstrap(spark, str(tmp_path / "lake"), bucket_count=4,
+                             compact_threshold=compact_threshold)
     a.replay(_events(spark, SEG1), chunk_size=10, source_hi=3)
     a.target.compact()  # local strategy: tombstone must survive the rewrite
     assert ("c2", 0) not in _keys(a)
     a.apply_chunk(_events(spark, STALE), lo=3, hi=4, batch_id=10)
+    a.maybe_compact()  # threshold 1: the chunk's bucket is rewritten
     got = _keys(a)
     assert ("c2", 0) not in got, "stale pre-delete event resurrected the key"
     assert got[("c1", 0)] == "hello" and got[("c3", 0)] == "keep"
     # a genuinely newer event re-creates the key (LWW, not a key blacklist)
     a.apply_chunk(_events(spark, FRESH), lo=4, hi=5, batch_id=11)
+    a.maybe_compact()
     assert _keys(a)[("c2", 0)] == "reborn"
 
 
 def test_stale_event_after_shuffle_compaction_stays_dead(spark, tmp_path):
-    a = CdcApplier.bootstrap(spark, str(tmp_path / "sh"), bucket_count=4, mode="mor")
+    a = CdcApplier.bootstrap(spark, str(tmp_path / "sh"), bucket_count=4)
     a.replay(_events(spark, SEG1), chunk_size=10, source_hi=3)
     a.target.compact(strategy="shuffle")
     a.apply_chunk(_events(spark, STALE), lo=3, hi=4, batch_id=10)
@@ -73,7 +78,7 @@ def test_stale_event_after_shuffle_compaction_stays_dead(spark, tmp_path):
 
 
 def test_stale_event_after_rebucket_stays_dead(spark, tmp_path):
-    a = CdcApplier.bootstrap(spark, str(tmp_path / "rb"), bucket_count=2, mode="mor")
+    a = CdcApplier.bootstrap(spark, str(tmp_path / "rb"), bucket_count=2)
     a.replay(_events(spark, SEG1), chunk_size=10, source_hi=3)
     a.target.compact()
     a.target.rebucket(8)  # the end-to-end probe's exact sequence
@@ -82,21 +87,25 @@ def test_stale_event_after_rebucket_stays_dead(spark, tmp_path):
     assert ("c2", 0) not in _keys(a)
 
 
-def test_cow_tombstone_survives_unrelated_merges(spark, tmp_path):
-    """CoW rewrites an affected bucket wholesale; the delete's memory must
-    ride through merges that touch its bucket for OTHER keys."""
-    a = CdcApplier.bootstrap(spark, str(tmp_path / "cw"), bucket_count=1, mode="cow")
+def test_tombstone_survives_per_chunk_compaction_of_its_bucket(spark, tmp_path):
+    """Under ``compact_threshold=1`` every chunk rewrites its affected
+    buckets wholesale; the delete's memory must ride through rewrites that
+    touch its bucket for OTHER keys."""
+    a = CdcApplier.bootstrap(spark, str(tmp_path / "cw"), bucket_count=1,
+                             compact_threshold=1)
     a.replay(_events(spark, SEG1), chunk_size=10, source_hi=3)
     # bucket_count=1: every chunk rewrites the single bucket
-    a.apply_chunk(_events(spark, [(4, "I", 41, "c9", 0, "user", "noise")]),
-                  lo=3, hi=4, batch_id=10)
-    a.apply_chunk(_events(spark, [(5, "I", 16, "c2", 0, "user", "zombie")]),
-                  lo=4, hi=5, batch_id=11)
+    for batch_id, row in ((10, (4, "I", 41, "c9", 0, "user", "noise")),
+                          (11, (5, "I", 16, "c2", 0, "user", "zombie"))):
+        a.apply_chunk(_events(spark, [row]), lo=row[0] - 1, hi=row[0],
+                      batch_id=batch_id)
+        a.maybe_compact()
+        assert not a.target.snapshot().delta_buckets()
     assert ("c2", 0) not in _keys(a)
 
 
 def test_expire_tombstones_declares_horizon(spark, tmp_path):
-    a = CdcApplier.bootstrap(spark, str(tmp_path / "ex"), bucket_count=4, mode="mor")
+    a = CdcApplier.bootstrap(spark, str(tmp_path / "ex"), bucket_count=4)
     a.replay(_events(spark, SEG1), chunk_size=10, source_hi=3)
     a.target.compact()
     assert a.target.snapshot().props.get("base_tombstones") is True
@@ -111,7 +120,7 @@ def test_expire_tombstones_declares_horizon(spark, tmp_path):
 
 
 def test_expire_tombstones_horizon_keeps_recent(spark, tmp_path):
-    a = CdcApplier.bootstrap(spark, str(tmp_path / "hz"), bucket_count=4, mode="mor")
+    a = CdcApplier.bootstrap(spark, str(tmp_path / "hz"), bucket_count=4)
     seg = SEG1 + [(4, "D", 100, "c3", 0, None, None)]  # second, newer delete
     a.replay(_events(spark, seg), chunk_size=10, source_hi=4)
     a.target.compact()
@@ -130,7 +139,7 @@ def test_expire_tombstones_horizon_keeps_recent(spark, tmp_path):
 def test_delete_free_table_never_flags_base_tombstones(spark, tmp_path):
     """The plain-scan fast path must stay byte-identical for tables that
     never saw a delete."""
-    a = CdcApplier.bootstrap(spark, str(tmp_path / "df"), bucket_count=4, mode="mor")
+    a = CdcApplier.bootstrap(spark, str(tmp_path / "df"), bucket_count=4)
     stream = [(i, "I", 10 + i, f"c{i}", 0, "user", "x") for i in range(8)]
     a.replay(_events(spark, stream), chunk_size=10, source_hi=7)
     a.target.compact()

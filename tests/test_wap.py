@@ -89,6 +89,54 @@ def test_staged_invisible_then_publish_fast_forward(spark, changes_path, tmp_pat
     assert lin.where("status = 'wap_published'").count() > 0
 
 
+def test_stage_publish_equals_apply(spark, tmp_path):
+    """``stage_chunk`` + ``publish_chunk`` and ``apply_chunk`` share one
+    write prefix: fed the same chunk on twin lakes they commit the same
+    offsets, delta files, visible state and lineage — the lineage rows
+    differ only in status, duration and where the quarantine count
+    rides."""
+    src = str(tmp_path / "changes.parquet")
+    generate_changes(
+        spark, 3000, n_convs=100, max_turns=12, invalid_one_in=97, seed=41,
+    ).write.parquet(src)
+    changes = spark.read.parquet(src)
+    first, rest = changes.where("lsn < 1500"), changes.where("lsn >= 1500")
+    staged = CdcApplier.bootstrap(spark, str(tmp_path / "wap"), bucket_count=8)
+    applied = CdcApplier.bootstrap(spark, str(tmp_path / "app"), bucket_count=8)
+    for a in (staged, applied):
+        a.apply_chunk(first, lo=-1, hi=1499, batch_id=0)
+
+    info = staged.stage_chunk(rest, "w", batch_id=1)
+    staged.publish_chunk("w")
+    stats = applied.apply_chunk(rest, lo=1499, hi=None, batch_id=1)
+    assert info["n_quarantined"] == stats.n_quarantined > 0
+    assert info["hi"] == stats.hi
+
+    snaps = [a.target.snapshot() for a in (staged, applied)]
+    assert snaps[0].summary["offsets"] == snaps[1].summary["offsets"]
+    rows = [
+        {b: st["n_rows"] for b, st in a.target.file_stats(s.delta_files).items()}
+        for a, s in zip((staged, applied), snaps)
+    ]
+    assert rows[0] == rows[1]
+    ok, msg = table_state_matches(
+        staged.target.read().toPandas(), applied.target.read().toPandas()
+    )
+    assert ok, msg
+
+    def lineage(a):
+        return sorted(
+            (
+                {k: v for k, v in r.asDict().items()
+                 if k not in ("status", "duration_ms", "n_quarantined")}
+                for r in a.lineage.read().where("batch_id = 1").collect()
+            ),
+            key=lambda r: r["source_partition"],
+        )
+
+    assert lineage(staged) == lineage(applied) != []
+
+
 def test_abandon_costs_no_events(spark, changes_path, tmp_path):
     applier = CdcApplier.bootstrap(spark, str(tmp_path / "lake"), bucket_count=8)
     changes, mid, hi = _halves(spark, changes_path)
