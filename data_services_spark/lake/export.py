@@ -38,6 +38,7 @@ import time
 import uuid
 from typing import Any
 
+from .refs import claim
 from .table import LakeTable
 
 _DELTA_DIR = "_delta_log"
@@ -185,23 +186,15 @@ def export_delta_log(
     }))
     lines += [json.dumps({"remove": r}) for r in removes]
     lines += [json.dumps({"add": a}) for a in adds]
-    tmp = os.path.join(log_dir, f".{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        f.write("\n".join(lines) + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    # O_EXCL claim: version files are immutable once named, so a
-    # concurrent exporter that claimed this version first wins
-    target = os.path.join(log_dir, f"{version:020d}.json")
+    # version files are immutable once named, so a concurrent exporter
+    # that claimed this version first wins
     try:
-        os.link(tmp, target)
+        claim(os.path.join(log_dir, f"{version:020d}.json"), "\n".join(lines) + "\n")
     except FileExistsError:
         raise FileExistsError(
             f"delta log version {version} already exists (concurrent "
             "export); re-run to diff against it"
         ) from None
-    finally:
-        os.remove(tmp)
     return {"version": version, "n_add": len(adds),
             "n_remove": len(removes), "log_dir": log_dir}
 

@@ -40,9 +40,20 @@ filesystem renames. The contract (modeled on Apache Iceberg's public spec):
 
 Layout on disk::
 
-    <root>/_lake/v<000000N>.json   immutable snapshot manifests
-    <root>/_lake/CURRENT           text file: latest snapshot id (atomic replace)
+    <root>/_lake/v<000000N>.json          immutable snapshot manifests
+    <root>/_lake/CURRENT                  text file: main's head snapshot id
+    <root>/_lake/BRANCH-<name>            text file: a branch's head snapshot id
+    <root>/_lake/.id_hwm                  text file: highest snapshot id ever minted
+    <root>/_lake/tag-<name>.json          {"name", "snapshot_id"}: a tag
+    <root>/_lake/consumer-<name>.json     {"name", "snapshot_id"}: a consumer position
+    <root>/_lake/staged-<wap_id>.json     a staged WAP batch's manifest
     <root>/data/c<N>-<token>/bucket=<K>/part-*.parquet
+
+Every ``_lake/`` file is written by ``lake/refs.py`` only: names that must
+appear once (manifests, tags, branches, consumers, staged batches) are
+claimed by hard-linking an fsynced tmp file, pointers that move (CURRENT,
+branch heads, ``.id_hwm``, consumer positions) by tmp + fsync +
+``os.replace``, under a flock when the move is a compare-and-set.
 
 Everything here is ordinary driver-side metadata handling (tiny JSON) plus
 declarative DataFrame writes — no RDDs, no per-row Python.
@@ -51,7 +62,6 @@ declarative DataFrame writes — no RDDs, no per-row Python.
 from __future__ import annotations
 
 import datetime
-import fcntl
 import functools
 import json
 import os
@@ -64,6 +74,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .refs import RefStore, claim, locked, replace
 
 _LAKE_DIR = "_lake"
 _CURRENT = "CURRENT"
@@ -589,12 +601,19 @@ class LakeTable:
         self.path = os.path.abspath(path)
         self._lake = os.path.join(self.path, _LAKE_DIR)
         self.branch = branch
-        self._current_file = _CURRENT if branch is None else f"BRANCH-{branch}"
+        self._refs = {
+            "tag": RefStore(self._lake, "tag", "tag-", ".json"),
+            "branch": RefStore(self._lake, "branch", "BRANCH-", ""),
+            "consumer": RefStore(self._lake, "consumer", "consumer-", ".json"),
+            "staged": RefStore(self._lake, "staged", "staged-", ".json"),
+        }
         if not os.path.exists(os.path.join(self._lake, _CURRENT)):
             raise TableNotFound(self.path)
-        if branch is not None and not os.path.exists(
-            os.path.join(self._lake, self._current_file)
-        ):
+        self._head = (
+            os.path.join(self._lake, _CURRENT) if branch is None
+            else self._refs["branch"].path(branch)
+        )
+        if not os.path.exists(self._head):
             raise ValueError(
                 f"no branch {branch!r} on table {self.path} "
                 f"(branches: {sorted(self.branches())})"
@@ -649,7 +668,7 @@ class LakeTable:
             props={"bucket_fn": "murmur3", **(props or {})},
         )
         cls._write_snapshot(lake, snap)
-        cls._flip_current(lake, snap.snapshot_id)
+        replace(os.path.join(lake, _CURRENT), str(snap.snapshot_id))
         return cls(spark, path)
 
     @classmethod
@@ -665,20 +684,27 @@ class LakeTable:
     def _write_snapshot(cls, lake_dir: str, snap: Snapshot) -> None:
         if snap.committed_at is None:
             snap.committed_at = time.time()
-        target = os.path.join(lake_dir, cls._snap_name(snap.snapshot_id))
         try:
-            # O_EXCL: two writers racing for the same snapshot id -> one loses.
-            fd = os.open(target, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
+            # claim: two writers racing for the same snapshot id -> one
+            # loses, and a manifest that fails to serialise is never named
+            claim(
+                os.path.join(lake_dir, cls._snap_name(snap.snapshot_id)),
+                json.dumps(snap.to_json()),
+            )
         except FileExistsError as e:
             raise CommitConflict(f"snapshot {snap.snapshot_id} already committed") from e
-        with os.fdopen(fd, "w") as f:
-            json.dump(snap.to_json(), f)
-            f.flush()
-            os.fsync(f.fileno())
         cls._advance_id_hwm(lake_dir, snap.snapshot_id)
 
     @staticmethod
-    def _advance_id_hwm(lake_dir: str, snapshot_id: int) -> None:
+    def _read_id_hwm(lake_dir: str) -> int:
+        try:
+            with open(os.path.join(lake_dir, _ID_HWM)) as f:
+                return int(f.read().strip() or -1)
+        except (FileNotFoundError, ValueError):
+            return -1
+
+    @classmethod
+    def _advance_id_hwm(cls, lake_dir: str, snapshot_id: int) -> None:
         """Persist the monotonic snapshot-id high-watermark (advanced under
         a flock). Without it ``_next_snapshot_id`` derives the next id from
         the surviving manifest listing, so after ``expire_snapshots``
@@ -687,83 +713,47 @@ class LakeTable:
         operator-held integer id (logs, bench JSON, rollback scripts)
         would silently resolve to a different snapshot."""
         path = os.path.join(lake_dir, _ID_HWM)
-        with open(path + ".flock", "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                cur = -1
-                try:
-                    with open(path) as f:
-                        cur = int(f.read().strip() or -1)
-                except (FileNotFoundError, ValueError):
-                    pass
-                if snapshot_id > cur:
-                    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-                    with open(tmp, "w") as f:
-                        f.write(str(snapshot_id))
-                        f.flush()
-                        os.fsync(f.fileno())
-                    os.replace(tmp, path)
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
-
-    @staticmethod
-    def _flip_current(
-        lake_dir: str, snapshot_id: int, current_name: str = _CURRENT
-    ) -> None:
-        tmp = os.path.join(lake_dir, f".current.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(snapshot_id))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(lake_dir, current_name))  # atomic on POSIX
+        with locked(path + ".flock"):
+            if snapshot_id > cls._read_id_hwm(lake_dir):
+                replace(path, str(snapshot_id))
 
     def current_snapshot_id(self) -> int:
-        with open(os.path.join(self._lake, self._current_file)) as f:
+        with open(self._head) as f:
             return int(f.read().strip())
 
     def _commit_flip(self, snapshot_id: int, expected_parent: int) -> None:
         """Compare-and-set the ref pointer: the flip happens only if the
         ref still points at ``expected_parent``, under a per-ref flock (no
         staleness — the kernel releases it with the process). This is the
-        COMMIT POINT: with DAG-global snapshot ids the O_EXCL manifest
-        write no longer doubles as the same-ref CAS (two same-ref writers
+        COMMIT POINT: with DAG-global snapshot ids the exclusive manifest
+        claim no longer doubles as the same-ref CAS (two same-ref writers
         can win DIFFERENT ids), so a blind pointer flip could silently
         orphan the slower writer's lineage. The loser now gets a
         CommitConflict for its caller's retry machinery; its
         already-written manifest is unreachable garbage that
         ``expire_snapshots`` sweeps."""
-        lock_path = os.path.join(self._lake, f".{self._current_file}.flock")
-        with open(lock_path, "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                cur = self.current_snapshot_id()
-                if cur != expected_parent:
-                    raise CommitConflict(
-                        f"ref {self._current_file} moved to {cur} while "
-                        f"committing {snapshot_id} (expected parent "
-                        f"{expected_parent}); manifest left for GC"
-                    )
-                self._flip_current(self._lake, snapshot_id, self._current_file)
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
+        ref = os.path.basename(self._head)
+        with locked(os.path.join(self._lake, f".{ref}.flock")):
+            cur = self.current_snapshot_id()
+            if cur != expected_parent:
+                raise CommitConflict(
+                    f"ref {ref} moved to {cur} while "
+                    f"committing {snapshot_id} (expected parent "
+                    f"{expected_parent}); manifest left for GC"
+                )
+            replace(self._head, str(snapshot_id))
 
     def _next_snapshot_id(self) -> int:
         """Branch-safe id allocation: ids are unique across the whole DAG
         AND across time (max of existing manifests and the persisted
         high-watermark, + 1) — an id is never re-minted even after the
-        manifest that carried it is expired; the O_EXCL manifest write
+        manifest that carried it is expired; the exclusive manifest claim
         arbitrates races and retry_commit re-allocates."""
         ids = [
             int(n[1:-5]) for n in os.listdir(self._lake)
             if n.startswith("v") and n.endswith(".json")
         ]
-        hwm = -1
-        try:
-            with open(os.path.join(self._lake, _ID_HWM)) as f:
-                hwm = int(f.read().strip() or -1)
-        except (FileNotFoundError, ValueError):
-            pass
-        return max(max(ids, default=-1), hwm) + 1
+        return max(max(ids, default=-1), self._read_id_hwm(self._lake)) + 1
 
     def snapshot(self, snapshot_id: int | None = None) -> Snapshot:
         sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
@@ -1529,17 +1519,9 @@ class LakeTable:
         ``incremental-between`` with tag names): the changelog from
         ``from_tag``'s snapshot to ``to_tag``'s (default: current head) —
         e.g. the row-level diff between two dataset releases."""
-        tags = self.tags()
-        if from_tag not in tags or (to_tag is not None and to_tag not in tags):
-            missing = [t for t in (from_tag, to_tag)
-                       if t is not None and t not in tags]
-            raise KeyError(
-                f"no tag(s) {missing} on table {self.path} "
-                f"(tags: {sorted(tags)})"
-            )
         return self.changes_between(
-            tags[from_tag],
-            None if to_tag is None else tags[to_tag],
+            self._ref_id("tag", from_tag),
+            None if to_tag is None else self._ref_id("tag", to_tag),
             with_before=with_before,
         )
 
@@ -1885,7 +1867,7 @@ class LakeTable:
     ) -> Snapshot:
         """Partition evolution for hash-bucketed tables: re-hash the full
         table into ``new_bucket_count`` buckets in ONE shuffle and commit
-        atomically (the same O_EXCL snapshot flip as every commit; old
+        atomically (the same exclusive snapshot claim as every commit; old
         files stay readable through time travel until snapshot expiry).
 
         Bucket count bounds write/compaction parallelism and per-bucket
@@ -2355,9 +2337,6 @@ class LakeTable:
     # convention across the harvest scripts); here the "move" is one atomic
     # snapshot flip and the audit reads the EXACT bytes that will publish.
 
-    def _staged_path(self, wap_id: str) -> str:
-        return os.path.join(self._lake, f"staged-{wap_id}.json")
-
     def stage_files(
         self,
         new_files: dict[str, list[str]],
@@ -2368,11 +2347,10 @@ class LakeTable:
         """Record already-written (uncommitted) delta files as a STAGED
         batch under ``wap_id``. The manifest pins the base snapshot and the
         bucket layout so ``publish_staged`` can detect a layout change; the
-        wap_id is claimed with O_EXCL link semantics (a duplicate stage
-        loses and its files are removed). Staged files are protected from
+        wap_id is claimed exactly once (a duplicate stage loses and its
+        files are removed). Staged files are protected from
         ``remove_orphan_files`` until published or abandoned."""
-        if not wap_id or wap_id != os.path.basename(wap_id) or wap_id.startswith("."):
-            raise ValueError(f"invalid wap_id {wap_id!r}")
+        path = self._refs["staged"].path(wap_id)
         snap = self.snapshot()
         man = {
             "wap_id": wap_id,
@@ -2383,16 +2361,11 @@ class LakeTable:
             "schema": df_schema.jsonValue(),
             "summary": summary or {},
         }
-        tmp = os.path.join(self._lake, f".staged.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(man, f, default=_stat_json)
         try:
-            os.link(tmp, self._staged_path(wap_id))  # O_EXCL claim
+            claim(path, json.dumps(man, default=_stat_json))
         except FileExistsError:
-            os.remove(tmp)
             self._remove_staged_data(man["new_files"])
             raise ValueError(f"wap_id {wap_id!r} is already staged") from None
-        os.remove(tmp)
         return man
 
     def stage_delta(
@@ -2412,21 +2385,10 @@ class LakeTable:
         return self.stage_files(new_files, df.schema, wap_id, summary)
 
     def staged_manifest(self, wap_id: str) -> dict[str, Any]:
-        try:
-            with open(self._staged_path(wap_id)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            raise KeyError(
-                f"no staged batch {wap_id!r} on table {self.path} "
-                f"(staged: {self.list_staged()})"
-            ) from None
+        return json.loads(self._refs["staged"].read(wap_id))
 
     def list_staged(self) -> list[str]:
-        return sorted(
-            fn[len("staged-"):-len(".json")]
-            for fn in os.listdir(self._lake)
-            if fn.startswith("staged-") and fn.endswith(".json")
-        )
+        return self._refs["staged"].names()
 
     def _staged_snapshot(self, man: dict[str, Any]) -> Snapshot:
         """Ephemeral snapshot = base snapshot + the staged delta overlay —
@@ -2514,7 +2476,7 @@ class LakeTable:
         if staged_files & {f for s in self.all_snapshots() for f in s.all_files()}:
             # a prior publish committed these files but crashed before
             # removing the manifest — republish is the manifest removal
-            os.remove(self._staged_path(wap_id))
+            self._refs["staged"].drop(wap_id)
             return self.snapshot()
 
         def attempt() -> Snapshot:
@@ -2539,7 +2501,7 @@ class LakeTable:
             )
 
         snap = retry_commit(attempt)
-        os.remove(self._staged_path(wap_id))
+        self._refs["staged"].drop(wap_id)
         return snap
 
     def abandon_staged(self, wap_id: str) -> int:
@@ -2552,12 +2514,43 @@ class LakeTable:
         man = self.staged_manifest(wap_id)
         live = {f for s in self.all_snapshots() for f in s.all_files()}
         staged_files = {f for fs in man["new_files"].values() for f in fs}
-        if staged_files & live:
-            os.remove(self._staged_path(wap_id))
-            return 0
-        n = self._remove_staged_data(man["new_files"])
-        os.remove(self._staged_path(wap_id))
+        n = 0
+        if not staged_files & live:
+            n = self._remove_staged_data(man["new_files"])
+        self._refs["staged"].drop(wap_id)
         return n
+
+    # ------------------------------------------------------------------ refs
+
+    def _existing_snapshot_id(self, snapshot_id: int | None) -> int:
+        """``snapshot_id`` (default: this ref's head), which a new ref may
+        point at only while its manifest exists."""
+        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
+        try:
+            self.snapshot(sid)
+        except FileNotFoundError:
+            raise ValueError(
+                f"snapshot {sid} does not exist on table {self.path} "
+                "(expired or never committed)"
+            ) from None
+        return sid
+
+    def _ref_id(self, kind: str, name: str) -> int:
+        """The snapshot a ref points at. A branch head is a bare id (it
+        shares ``current_snapshot_id`` with CURRENT); a staged batch pins
+        its base snapshot."""
+        text = self._refs[kind].read(name)
+        if kind == "branch":
+            return int(text)
+        return int(json.loads(text)["base_id" if kind == "staged" else "snapshot_id"])
+
+    def _ref_ids(self, kind: str) -> dict[str, int]:
+        return {n: self._ref_id(kind, n) for n in self._refs[kind].names()}
+
+    def _ref_rows(self) -> list[tuple[str, str, int]]:
+        """``(kind, name, snapshot_id)`` of every tag, branch, consumer and
+        staged batch."""
+        return [(k, n, sid) for k in self._refs for n, sid in self._ref_ids(k).items()]
 
     # ------------------------------------------------------------------ tags
     # Named snapshot refs (Iceberg tags): a dataset-release workflow's
@@ -2565,70 +2558,25 @@ class LakeTable:
     # matter how many commits land after it, because a tagged snapshot is
     # retained through expire_snapshots until the tag is dropped.
 
-    def _tag_path(self, name: str) -> str:
-        return os.path.join(self._lake, f"tag-{name}.json")
-
     def tag(self, name: str, snapshot_id: int | None = None) -> int:
         """Create an immutable named ref to a snapshot (default: current).
         Re-tagging an existing name refuses — drop_tag first (an audit
         trail should never silently move)."""
-        if not name or name != os.path.basename(name) or name.startswith("."):
-            raise ValueError(f"invalid tag name {name!r}")
-        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        try:
-            self.snapshot(sid)  # must exist (and not already be expired)
-        except FileNotFoundError:
-            raise ValueError(
-                f"snapshot {sid} does not exist on table {self.path} "
-                f"(expired or never committed) — cannot tag it"
-            ) from None
-        tmp = os.path.join(self._lake, f".tag.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"name": name, "snapshot_id": sid}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, self._tag_path(name))  # O_EXCL claim
-        except FileExistsError:
-            os.remove(tmp)
-            raise ValueError(
-                f"tag {name!r} already exists (snapshot "
-                f"{self.tags()[name]}); drop_tag first"
-            ) from None
-        os.remove(tmp)
+        sid = self._existing_snapshot_id(snapshot_id)
+        self._refs["tag"].create(name, json.dumps({"name": name, "snapshot_id": sid}))
         return sid
 
     def tags(self) -> dict[str, int]:
-        out: dict[str, int] = {}
-        for fn in os.listdir(self._lake):
-            if fn.startswith("tag-") and fn.endswith(".json"):
-                with open(os.path.join(self._lake, fn)) as f:
-                    d = json.load(f)
-                out[d["name"]] = int(d["snapshot_id"])
-        return out
+        return self._ref_ids("tag")
 
     def drop_tag(self, name: str) -> None:
-        try:
-            os.remove(self._tag_path(name))
-        except FileNotFoundError:
-            raise KeyError(
-                f"no tag {name!r} on table {self.path} "
-                f"(tags: {sorted(self.tags())})"
-            ) from None
+        self._refs["tag"].drop(name)
 
     def read_tag(self, name: str, **kwargs: Any) -> DataFrame:
         """Read the table AS OF a named tag (``VERSION AS OF`` by name)."""
-        tags = self.tags()
-        if name not in tags:
-            raise KeyError(
-                f"no tag {name!r} on table {self.path} (tags: {sorted(tags)})"
-            )
-        return self.read(snapshot_id=tags[name], **kwargs)
+        return self.read(snapshot_id=self._ref_id("tag", name), **kwargs)
 
     # -------------------------------------------------------------- branches
-
-    def _branch_path(self, name: str) -> str:
-        return os.path.join(self._lake, f"BRANCH-{name}")
 
     def create_branch(self, name: str, snapshot_id: int | None = None) -> int:
         """Fork a named branch at a snapshot (default: this ref's head).
@@ -2640,39 +2588,12 @@ class LakeTable:
         audit-then-publish; a branch carries a multi-commit line of work
         (backfills, migration dry-runs) with the full verb set available
         on it."""
-        if not name or name != os.path.basename(name) or name.startswith("."):
-            raise ValueError(f"invalid branch name {name!r}")
-        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        try:
-            self.snapshot(sid)
-        except FileNotFoundError:
-            raise ValueError(
-                f"snapshot {sid} does not exist on table {self.path} — "
-                "cannot branch there"
-            ) from None
-        tmp = os.path.join(self._lake, f".branch.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(sid))
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, self._branch_path(name))  # O_EXCL claim
-        except FileExistsError:
-            os.remove(tmp)
-            raise ValueError(
-                f"branch {name!r} already exists (head "
-                f"{self.branches()[name]}); drop_branch first"
-            ) from None
-        os.remove(tmp)
+        sid = self._existing_snapshot_id(snapshot_id)
+        self._refs["branch"].create(name, str(sid))
         return sid
 
     def branches(self) -> dict[str, int]:
-        out: dict[str, int] = {}
-        for fn in os.listdir(self._lake):
-            if fn.startswith("BRANCH-"):
-                with open(os.path.join(self._lake, fn)) as f:
-                    out[fn[len("BRANCH-"):]] = int(f.read().strip())
-        return out
+        return self._ref_ids("branch")
 
     def branch_table(self, name: str) -> "LakeTable":
         """Open this table ON the named branch."""
@@ -2698,13 +2619,7 @@ class LakeTable:
         first. Metadata-only, atomic."""
         if self.branch is not None:
             raise ValueError("fast_forward runs on the MAIN handle")
-        heads = self.branches()
-        if name not in heads:
-            raise KeyError(
-                f"no branch {name!r} on table {self.path} "
-                f"(branches: {sorted(heads)})"
-            )
-        head = heads[name]
+        head = self._ref_id("branch", name)
         cur = self.current_snapshot_id()
         if cur == head:
             return head
@@ -2717,18 +2632,9 @@ class LakeTable:
         return head
 
     def drop_branch(self, name: str) -> None:
-        try:
-            os.remove(self._branch_path(name))
-        except FileNotFoundError:
-            raise KeyError(
-                f"no branch {name!r} on table {self.path} "
-                f"(branches: {sorted(self.branches())})"
-            ) from None
+        self._refs["branch"].drop(name)
 
     # ------------------------------------------------------------- consumers
-
-    def _consumer_path(self, name: str) -> str:
-        return os.path.join(self._lake, f"consumer-{name}.json")
 
     def register_consumer(self, name: str, snapshot_id: int | None = None) -> int:
         """Register a named downstream incremental reader at a starting
@@ -2742,40 +2648,14 @@ class LakeTable:
         changelog a lagging consumer still needs can never be GC'd out
         from under it. Position files are O(1) metadata; nothing scales
         with consumer count but one JSON file each."""
-        if not name or name != os.path.basename(name) or name.startswith("."):
-            raise ValueError(f"invalid consumer name {name!r}")
-        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        try:
-            self.snapshot(sid)
-        except FileNotFoundError:
-            raise ValueError(
-                f"snapshot {sid} does not exist on table {self.path} — "
-                "cannot start a consumer there"
-            ) from None
-        tmp = os.path.join(self._lake, f".consumer.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"name": name, "snapshot_id": sid}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, self._consumer_path(name))  # O_EXCL claim
-        except FileExistsError:
-            os.remove(tmp)
-            raise ValueError(
-                f"consumer {name!r} already registered (at snapshot "
-                f"{self.consumers()[name]}); drop_consumer first"
-            ) from None
-        os.remove(tmp)
+        sid = self._existing_snapshot_id(snapshot_id)
+        self._refs["consumer"].create(
+            name, json.dumps({"name": name, "snapshot_id": sid})
+        )
         return sid
 
     def consumers(self) -> dict[str, int]:
-        out: dict[str, int] = {}
-        for fn in os.listdir(self._lake):
-            if fn.startswith("consumer-") and fn.endswith(".json"):
-                with open(os.path.join(self._lake, fn)) as f:
-                    d = json.load(f)
-                out[d["name"]] = int(d["snapshot_id"])
-        return out
+        return self._ref_ids("consumer")
 
     def consume(
         self, name: str, with_before: bool = False,
@@ -2787,12 +2667,7 @@ class LakeTable:
         at-least-once handshake (a crash between the two re-reads the
         same window; the diff-shaped changelog is idempotent to re-apply,
         same as the engine's own chunk replay)."""
-        pos = self.consumers().get(name)
-        if pos is None:
-            raise KeyError(
-                f"no consumer {name!r} on table {self.path} "
-                f"(consumers: {sorted(self.consumers())})"
-            )
+        pos = self._ref_id("consumer", name)
         to_id = self.current_snapshot_id()
         return self.changes_between(pos, to_id, with_before=with_before), to_id
 
@@ -2805,40 +2680,18 @@ class LakeTable:
         last, rewinding exactly the position the guard protects (the
         same CAS discipline as ``_commit_flip``)."""
         self.snapshot(snapshot_id)  # must exist
-        lock_path = self._consumer_path(name) + ".flock"
-        with open(lock_path, "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                pos = self.consumers().get(name)
-                if pos is None:
-                    raise KeyError(
-                        f"no consumer {name!r} on table {self.path} "
-                        f"(consumers: {sorted(self.consumers())})"
-                    )
-                if snapshot_id < pos:
-                    raise ValueError(
-                        f"consumer {name!r} ack {snapshot_id} would rewind "
-                        f"its position {pos} — stale ack rejected"
-                    )
-                tmp = os.path.join(
-                    self._lake, f".consumer.{uuid.uuid4().hex}.tmp"
+        path = self._refs["consumer"].path(name)
+        with locked(path + ".flock"):
+            pos = self._ref_id("consumer", name)
+            if snapshot_id < pos:
+                raise ValueError(
+                    f"consumer {name!r} ack {snapshot_id} would rewind "
+                    f"its position {pos} — stale ack rejected"
                 )
-                with open(tmp, "w") as f:
-                    json.dump({"name": name, "snapshot_id": snapshot_id}, f)
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, self._consumer_path(name))  # atomic flip
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
+            replace(path, json.dumps({"name": name, "snapshot_id": snapshot_id}))
 
     def drop_consumer(self, name: str) -> None:
-        try:
-            os.remove(self._consumer_path(name))
-        except FileNotFoundError:
-            raise KeyError(
-                f"no consumer {name!r} on table {self.path} "
-                f"(consumers: {sorted(self.consumers())})"
-            ) from None
+        self._refs["consumer"].drop(name)
 
     # -------------------------------------------------------------- rollback
 
@@ -3468,20 +3321,16 @@ class LakeTable:
                 "histories share main's snapshots; drop_branch (or "
                 "fast_forward) first, then expire from main"
             )
-        pinned = (
-            {self.staged_manifest(w)["base_id"] for w in self.list_staged()}
-            | set(self.tags().values())
-            # a lagging consumer's position snapshot is the FROM side of
-            # its next changes_between — GC'ing it would strand the
-            # consumer with no resume point (Paimon retains consumer refs
-            # the same way)
-            | set(self.consumers().values())
-        )
-        # every live branch pins its whole reachable ancestry: its head
+        # a lagging consumer's position snapshot is the FROM side of its
+        # next changes_between — GC'ing it would strand the consumer with
+        # no resume point (Paimon retains consumer refs the same way).
+        # Every live branch pins its whole reachable ancestry: its head
         # must stay readable, and reads at the head resolve files through
         # ancestor manifests (Iceberg retains ref'd snapshots identically)
-        for head in self.branches().values():
-            pinned |= self._ancestry_ids(head)
+        refs = self._ref_rows()
+        pinned: set[int] = set()
+        for kind, _, sid in refs:
+            pinned |= self._ancestry_ids(sid) if kind == "branch" else {sid}
         # keep window = the last keep_last of MAIN's reachable ancestry;
         # expiry candidates come from the FULL DAG listing, so snapshots a
         # pin once retained (and a prior expiry's chain break then made
@@ -3505,7 +3354,9 @@ class LakeTable:
         # else — old reachable history, doomed CAS losers — expires
         # immediately.
         reachable = {s.snapshot_id for s in self.snapshots()}
-        ref_heads = {self.current_snapshot_id()} | set(self.branches().values())
+        ref_heads = {self.current_snapshot_id()} | {
+            sid for kind, _, sid in refs if kind == "branch"
+        }
         horizon = time.time() - max(0.0, orphan_grace_sec)
 
         def _expirable(s: "Snapshot") -> bool:
@@ -3558,6 +3409,7 @@ class LakeTable:
         snap = self.snapshot()
         snaps = self.snapshots()
         delta_layers = {b: len(fs) for b, fs in snap.delta_files.items() if fs}
+        refs = {k: self._ref_ids(k) for k in self._refs}
         return {
             "path": self.path,
             "snapshot_id": snap.snapshot_id,
@@ -3576,11 +3428,11 @@ class LakeTable:
             "cluster_by": list(snap.props.get("cluster_by", [])),
             "committed_lsn": snap.summary.get("offsets", {}).get("last_lsn"),
             "batch_id": snap.summary.get("batch_id"),
-            "staged_wap_ids": self.list_staged(),
-            "tags": self.tags(),
-            "consumers": self.consumers(),
+            "staged_wap_ids": list(refs["staged"]),
+            "tags": refs["tag"],
+            "consumers": refs["consumer"],
             "branch": self.branch,
-            "branches": self.branches(),
+            "branches": refs["branch"],
         }
 
     def metadata_table(self, kind: str) -> DataFrame:
@@ -3596,8 +3448,8 @@ class LakeTable:
         * ``files`` — current snapshot's data files: path, bucket,
           base/delta kind, per-column min/max bounds JSON (when the table
           harvests stats);
-        * ``refs`` — tags, branches and consumers with their snapshot
-          positions.
+        * ``refs`` — tags, branches, consumers and staged WAP batches
+          (their base snapshot) with their snapshot positions.
         """
         if kind == "snapshots":
             rows = [
@@ -3640,14 +3492,7 @@ class LakeTable:
                 "col_bounds string",
             )
         if kind == "refs":
-            rows = (
-                [("tag", n, sid) for n, sid in sorted(self.tags().items())]
-                + [("branch", n, sid)
-                   for n, sid in sorted(self.branches().items())]
-                + [("consumer", n, sid)
-                   for n, sid in sorted(self.consumers().items())]
-                + [("main", "CURRENT", self.current_snapshot_id())]
-            )
+            rows = self._ref_rows() + [("main", "CURRENT", self.current_snapshot_id())]
             return self.spark.createDataFrame(
                 rows, "kind string, name string, snapshot_id long"
             )

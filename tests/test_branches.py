@@ -77,6 +77,15 @@ def test_branch_guards(spark, tmp_table_dir):
         t.fast_forward("ghost")
     with pytest.raises(KeyError):
         t.drop_branch("ghost")
+    for verb in (t.drop_tag, t.read_tag, t.staged_manifest):
+        with pytest.raises(KeyError):
+            verb("ghost")
+    # a name create refuses is refused by every verb, not looked up
+    for bad in ("", "a/b", ".x"):
+        for verb in (t.create_branch, t.tag, t.drop_tag, t.read_tag,
+                     t.drop_branch, t.fast_forward, t.staged_manifest):
+            with pytest.raises(ValueError):
+                verb(bad)
     b = t.branch_table("x")
     with pytest.raises(ValueError):
         b.fast_forward("x")  # main-handle verb
@@ -188,6 +197,7 @@ def test_metadata_tables(spark, tmp_table_dir):
     t.tag("rel1")
     t.create_branch("wip")
     t.register_consumer("mart")
+    t.stage_files({}, SCHEMA, "audit-1")
 
     snaps = t.metadata_table("snapshots").collect()
     assert [r["operation"] for r in snaps] == ["create", "append"]
@@ -205,6 +215,7 @@ def test_metadata_tables(spark, tmp_table_dir):
     assert refs[("branch", "wip")] == cur
     assert refs[("consumer", "mart")] == cur
     assert refs[("main", "CURRENT")] == cur
+    assert refs[("staged", "audit-1")] == cur
 
     with pytest.raises(ValueError):
         t.metadata_table("nope")

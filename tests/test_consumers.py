@@ -84,6 +84,12 @@ def test_consumer_guards(spark, tmp_table_dir):
     t.drop_consumer("mart")
     with pytest.raises(KeyError):
         t.drop_consumer("mart")
+    for bad in ("", "a/b", ".x"):
+        for verb in (t.register_consumer, t.consume, t.drop_consumer):
+            with pytest.raises(ValueError):
+                verb(bad)
+        with pytest.raises(ValueError):
+            t.ack_consumer(bad, sid)
 
 
 def test_expiry_retains_consumer_position(spark, tmp_table_dir):

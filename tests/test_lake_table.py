@@ -106,6 +106,24 @@ def test_commit_conflict(spark, tmp_table_dir):
         t2.replace_buckets(_df(spark, [("b", 2, "y")]), [0], expected_parent=snap.snapshot_id)
 
 
+def test_failed_manifest_write_leaves_no_named_manifest(spark, tmp_table_dir):
+    """A commit whose manifest cannot be serialised names no manifest: a
+    truncated ``vN.json`` would break every later ``all_snapshots`` and so
+    expiry, orphan GC and WAP publish/abandon."""
+    import os
+
+    t = LakeTable.create(spark, tmp_table_dir, SCHEMA, ["k"], bucket_count=2)
+    t.append(_df(spark, [("a", 1, "x")]))
+    failed_id = t._next_snapshot_id()
+    with pytest.raises(TypeError):
+        t.append(_df(spark, [("b", 2, "y")]), summary={"bad": object()})
+    assert [s.snapshot_id for s in t.all_snapshots()] == [0, 1]
+    assert not os.path.exists(os.path.join(t._lake, t._snap_name(failed_id)))
+    assert t.expire_snapshots(keep_last=1) == [0]
+    t.append(_df(spark, [("c", 3, "z")]))
+    assert sorted(r["k"] for r in t.read().collect()) == ["a", "c"]
+
+
 def test_expire_snapshots(spark, tmp_table_dir):
     import os
 

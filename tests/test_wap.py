@@ -389,7 +389,7 @@ def test_publish_crash_before_manifest_removal_is_safe(spark, changes_path, tmp_
     changes, mid, hi = _halves(spark, changes_path)
     applier.replay(changes, chunk_size=hi, source_hi=mid)
     applier.stage_chunk(changes.where(F.col("lsn") > mid), "crashy", hi=hi)
-    man_path = applier.target._staged_path("crashy")
+    man_path = applier.target._refs["staged"].path("crashy")
     saved = open(man_path).read()
     applier.publish_chunk("crashy")
 
