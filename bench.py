@@ -9,9 +9,9 @@ Measures:
    to JIT steady state, reps INTERLEAVED across levels so both sample the
    same host-noise windows; reports throughput at both, best-vs-best
    scaling efficiency, and the median paired (back-to-back) efficiency.
-2. **Hot-key skew leg**: 50% of all events on ONE conv_id, replayed with
-   the default max_by dedup vs the explicit two-phase salted dedup —
-   throughput for both plus a full-row fingerprint equality check.
+2. **Hot-key skew leg**: 50% of all events on ONE conv_id, replayed
+   through the default apply loop — throughput plus a key slice of the
+   final state (the hot key included) verified against the DuckDB oracle.
 3. **Per-query wall times** for the operator registry at $SPARK_GRAFT_SF_DIR.
 4. **Substrate floor control** (opt-in, SPARK_GRAFT_BENCH_FLOOR=1): the
    simplest possible Spark job (scan -> LWW agg -> noop, zero engine code)
@@ -307,7 +307,7 @@ def main() -> int:
         paired_median_efficiency=paired_med,
     )
 
-    # Hot-key skew leg: salted vs max_by on a 50%-one-key stream.
+    # Hot-key skew leg: a 50%-one-key stream, oracle-verified.
     skew = None
     if _remaining() > 300:
         skew = _worker(
@@ -391,9 +391,8 @@ def main() -> int:
     if skew is not None:
         result["skew"] = {
             "events": skew["events"],
-            "maxby_events_per_sec": skew["max_by_events_per_sec"],
-            "salted_events_per_sec": skew["salted_events_per_sec"],
-            "final_state_equal": skew["final_state_equal"],
+            "events_per_sec": skew["events_per_sec"],
+            "oracle_match": skew["oracle_match"],
         }
 
     os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
@@ -449,65 +448,28 @@ def _write_baseline_md(res_lo, res_hi, eff, e2e_eff, paired, paired_med,
             "shared-memory contention."
         )
     if skew is not None:
-        # The comparison sentence must FOLLOW the measured numbers — a
-        # static "both clear the same band" claim once shipped next to a
-        # noise-sunk 6x-slow max_by rep and contradicted its own table.
-        ratio = (skew["max_by_events_per_sec"]
-                 / max(skew["salted_events_per_sec"], 1e-9))
-        if ratio >= 0.8:
-            comparison = (
-                "on this stream both clear the same throughput band "
-                f"(max_by/salted = {ratio:.2f}x)"
-            )
-        else:
-            comparison = (
-                f"on THIS run max_by measured {ratio:.2f}x of salted — "
-                "read the per-rep walls above before concluding anything: "
-                "on this shared host a contention window can sink both of "
-                "one leg's reps (the lo/hi CDC pair, which also runs "
-                "max_by, is the controlled measurement of the default "
-                "path), while a genuine gap at clean reps is exactly the "
-                "regime the salted flip exists for"
-            )
-        rep_walls = ""
-        if "max_by_rep_walls" in skew:
-            rep_walls = (
-                f"\nPer-rep walls (methods interleaved per rep round): "
-                f"max_by={skew['max_by_rep_walls']}, "
-                f"salted={skew['salted_rep_walls']}.\n"
-            )
-        skew_md = f"""## Hot-key skew: salted vs max_by (50% of events on ONE conv_id)
+        skew_md = f"""## Hot-key skew (50% of events on ONE conv_id)
 
-SURVEY §3 names hot-conv salting as the scaling story (reference precedent:
-one channel dominates a run, ``faimms.py:245-247``). This leg replays a
-pathological stream — {skew['events']:,} events, 50% on a single conv_id —
-through the identical apply loop with both dedup strategies at local[32]:
+A pathological stream — {skew['events']:,} events, 50% on a single
+conv_id (reference precedent: one channel dominates a run,
+``faimms.py:245-247``) — replayed through the default apply loop at
+local[32]: **{skew['events_per_sec']:,} events/s** (best of reps
+{skew['rep_walls']}), final state **{skew['oracle_match']}** vs the
+independent DuckDB oracle on the 10%-of-keys slice holding the hot key
+({skew['verified_rows']:,} rows; also pinned by
+``tests/test_apply_e2e.py::test_skewed_stream_matches_oracle``).
 
-| dedup | events/s | wall |
-|---|---|---|
-| max_by (default, map-side combined) | {skew['max_by_events_per_sec']:,} | {skew['max_by_wall_sec']}s |
-| salted two-phase | {skew['salted_events_per_sec']:,} | {skew['salted_wall_sec']}s |
-
-Final states identical: **{skew['final_state_equal']}** (full-row xxhash64
-fingerprint + row count, {skew['table_rows']:,} rows; also pinned by
-``tests/test_apply_e2e.py::test_skewed_stream_salted_equals_maxby``).
-{rep_walls}
-Reading: ``max_by`` is ALREADY skew-tolerant at the dedup stage — partial
+Reading: ``max_by`` is skew-tolerant at the dedup stage — partial
 aggregation collapses the hot key's duplicates map-side, so the shuffle
-carries one partial per upstream partition rather than every hot event,
-exactly like a combiner. The salted two-phase variant exists for the
-regime where even the post-combine winner rows of one key overwhelm a
-single reducer (10^10-event streams with a single conversation receiving
-a measurable fraction of ALL traffic); {comparison}. Equality of final
-state is the load-bearing fact — the strategy is a config flip
-(``dedup_method='salted'``), not a rewrite, when a production stream's
-key histogram demands it.
+carries at most one partial per map partition rather than every hot event,
+exactly like a combiner. Skew past that point is a task-layer concern
+(compaction's hot-bucket shard split), not a dedup strategy.
 """
     else:
         skew_md = ("## Hot-key skew leg\n\nSkipped this run (bench budget); "
                    "see tests/test_apply_e2e.py::"
-                   "test_skewed_stream_salted_equals_maxby for the "
-                   "state-equality pin and git history for measured runs.\n")
+                   "test_skewed_stream_matches_oracle for the "
+                   "oracle pin and git history for measured runs.\n")
     if patch is not None:
         patch_md = f"""## Patch-ingest leg (merge_engine='partial_update')
 

@@ -8,7 +8,7 @@ as one declarative plan):
    checkpoint-bounded download-range idiom, ``aims_realtime_util.py:300-350``);
 2. validation gates -> quarantine branch (``faimms.py:199-207``);
 3. LWW dedup to one row per ``(conv_id, turn_idx)`` (map-side-combining
-   aggregate; explicit salting available for pathological hot keys);
+   aggregate: a hot key's duplicates collapse before the shuffle);
 4. delta append: the deduped winners — delete winners included, as key
    tombstones — are written as one merge-on-read delta layer of only the
    affected buckets; reads resolve LWW across base ∪ deltas by each row's
@@ -118,8 +118,6 @@ class CdcApplier:
         lineage: LakeTable | None = None,
         quarantine: LakeTable | None = None,
         metrics: LakeTable | None = None,
-        dedup_method: str = "max_by",
-        salt_buckets: int = 64,
         with_lineage: bool = True,
         compact_threshold: int | None = 16,
         validator=None,
@@ -138,8 +136,6 @@ class CdcApplier:
         self.lineage = lineage
         self.quarantine = quarantine
         self.metrics = metrics
-        self.dedup_method = dedup_method
-        self.salt_buckets = salt_buckets
         self.with_lineage = with_lineage
         self.compact_threshold = compact_threshold
         self._lineage_buf: list[dict] = []
@@ -252,8 +248,6 @@ class CdcApplier:
                 valid,
                 keys=self.keys,
                 order=self.order,
-                method=self.dedup_method,
-                salt_buckets=self.salt_buckets,
                 keep="first" if self.merge_engine == "first_row" else "last",
             )
         norm = valid.withColumn(

@@ -6,29 +6,19 @@ tiebreaker (reference precedent: BOM ingest sorts by timestamp and
 drop-duplicates per source, ``ardc_nrt/lib/bom/wfs.py:100-112``; the
 reference *rejects* tied batches, we resolve them deterministically).
 
-Three physical strategies, all producing identical results:
-
-* ``max_by`` (default): ``groupBy(keys).agg(max_by(payload, order))``.
-  This is the scale winner — Catalyst plans it as partial aggregation with
-  map-side combine, so a hot key's millions of duplicate events collapse
-  *before* the shuffle. No sort, no window buffer.
-* ``salted``: explicit two-phase aggregation for pathological single-key
-  skew — phase 1 groups by ``(keys, salt)`` where salt spreads one key over
-  S reducers, phase 2 re-reduces the S partial winners. At 10^10 events
-  with one conv taking 20% of the stream, this bounds any single reducer.
-  (max_by's map-side combine already does most of this; the salted form is
-  the explicit, AQE-independent guarantee the north_rule asks for.)
-* ``window``: ``row_number() OVER (PARTITION BY keys ORDER BY ts DESC,
-  lsn DESC) = 1`` — the literal north-star formulation, kept for
-  cross-checking the aggregate variants and for when the full duplicate
-  set (not just the winner) is needed downstream.
+Physical plan: ``groupBy(keys).agg(max_by(payload, struct(order)))``.
+Catalyst plans it as partial aggregation with map-side combine, so a hot
+key's millions of duplicate events collapse to at most one partial per map
+partition *before* the shuffle — skew is absorbed at the task layer, no
+salting, no sort, no window buffer. The same fold resolves merge-on-read
+delta layers in ``LakeTable.read``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .schemas import KEY_COLS, ORDER_COLS
@@ -42,58 +32,24 @@ def lww_dedup(
     df: DataFrame,
     keys: Sequence[str] = tuple(KEY_COLS),
     order: Sequence[str] = tuple(ORDER_COLS),
-    method: str = "max_by",
-    salt_buckets: int = 64,
     keep: str = "last",
 ) -> DataFrame:
     """Return one row per key: the last writer under ``order``.
 
     Output columns == input columns (payload of the winning row).
-    ``keep='first'`` flips every strategy to first-writer-wins (min over
+    ``keep='first'`` flips the fold to first-writer-wins (``min_by`` over
     the order) — the resolution rule of ``merge_engine='first_row'``
     tables; min is as map-side combinable, idempotent, and
     arrival-order-free as max, so all the composition properties carry.
     """
     if keep not in ("last", "first"):
         raise ValueError(f"keep must be 'last' or 'first', got {keep!r}")
-    first = keep == "first"
     keys = list(keys)
-    order = list(order)
     payload_cols = [c for c in df.columns if c not in keys]
-
-    if method == "window":
-        by = [F.col(c).asc() if first else F.col(c).desc() for c in order]
-        w = Window.partitionBy(*keys).orderBy(*by)
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
     payload = F.struct(*[F.col(c) for c in payload_cols])
-    rank = _order_struct(order)
-    _by = F.min_by if first else F.max_by
-    _ext = F.min if first else F.max
-
-    if method == "max_by":
-        agg = df.groupBy(*keys).agg(_by(payload, rank).alias("_w"))
-        return agg.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in payload_cols])
-
-    if method == "salted":
-        # phase 1: spread each key over salt_buckets reducers; the salt is a
-        # hash of the total-order column so redelivered duplicates land in
-        # the same salt bucket (determinism, not correctness — LWW is
-        # idempotent across buckets anyway).
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in order]), F.lit(salt_buckets))
-        partial = (
-            df.withColumn("_salt", salt)
-            .groupBy(*keys, "_salt")
-            .agg(_by(payload, rank).alias("_w"), _ext(rank).alias("_r"))
-        )
-        final = partial.groupBy(*keys).agg(_by(F.col("_w"), F.col("_r")).alias("_w"))
-        return final.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in payload_cols])
-
-    raise ValueError(f"unknown dedup method: {method}")
+    _by = F.min_by if keep == "first" else F.max_by
+    agg = df.groupBy(*keys).agg(_by(payload, _order_struct(order)).alias("_w"))
+    return agg.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in payload_cols])
 
 
 #: merge functions accepted by ``merge_engine='aggregation'`` tables —

@@ -98,7 +98,7 @@ class CdcRouter:
         **applier_kwargs: Any,
     ) -> "CdcRouter":
         """Create one ``CdcApplier`` universe per spec under
-        ``root/<name>/``. ``applier_kwargs`` (dedup_method,
+        ``root/<name>/``. ``applier_kwargs`` (with_lineage,
         compact_threshold, ...) apply to every table."""
         appliers = {
             name: CdcApplier.bootstrap_custom(

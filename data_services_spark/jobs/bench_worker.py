@@ -219,107 +219,52 @@ def main(argv: list[str] | None = None) -> int:
         }))
         return 0
 
-    if args.mode == "skew":
-        # Hot-key skew evidence (SURVEY §3: salting is the scaling story;
-        # reference precedent: one channel dominates a run,
-        # faimms.py:245-247). A pathological stream — 50% of ALL events on
-        # ONE conv_id — replayed twice: default map-side-combined max_by
-        # vs the explicit two-phase salted dedup, same input, same cores.
-        # Reports throughput for both plus a full-row fingerprint proving
-        # identical final state. Reps are INTERLEAVED across the two
-        # methods (max_by r0, salted r0, max_by r1, ...) — the same
-        # protocol that fixed the lo/hi pair — so a host-contention window
-        # degrades both legs' matching reps instead of silently sinking
-        # one method's entire sample (a best-of-2 max_by leg once measured
-        # 6x slow because both its reps landed in one bad window).
+    if args.mode in ("skew", "patch"):
+        # Two replay legs, each best-of-N events/s plus an INDEPENDENT
+        # DuckDB oracle match of the final state — throughput claims ride
+        # on verified semantics.
+        # * skew: 50% of ALL events on ONE conv_id (reference precedent:
+        #   one channel dominates a run, faimms.py:245-247) through the
+        #   default apply loop — max_by's partial aggregation collapses the
+        #   hot key's duplicates map-side, so no reducer sees the raw
+        #   hot-key volume (cdc/oracle.py:expected_final_state);
+        # * patch (opt-in): 40% of non-delete events are sparse updates
+        #   (op 'P', pseudo-random written-column subsets) into a
+        #   merge_engine='partial_update' table
+        #   (cdc/oracle.py:expected_patch_state).
         from pyspark.sql import functions as F
 
         from data_services_spark.cdc.apply import CdcApplier
         from data_services_spark.cdc.generator import generate_changes
-
-        changes = generate_changes(
-            spark, args.events, n_convs=max(1000, args.events // 100),
-            max_turns=50, n_hot=1, hot_pct=50,
-            partitions=max(32, args.cpus * 4),
-        )
-        changes.write.mode("overwrite").parquet(args.changes)
-        stream = spark.read.parquet(args.changes)
-        chunk_size = max(1, (args.events + args.chunks - 1) // args.chunks)
-        out: dict = {"events": args.events, "hot_pct": 50, "n_hot": 1}
-        fingerprints = {}
-        methods = ("max_by", "salted")
-        walls: dict = {m: [] for m in methods}
-        totals: dict = {m: 0 for m in methods}
-        for rep in range(max(1, args.repeats)):
-            for method in methods:
-                workdir = f"{args.workdir}_{method}_r{rep}"
-                shutil.rmtree(workdir, ignore_errors=True)
-                applier = CdcApplier.bootstrap(
-                    spark, workdir, bucket_count=args.buckets,
-                    dedup_method=method,
-                )
-                t0 = time.monotonic()
-                stats = applier.replay(
-                    stream, chunk_size=chunk_size,
-                    source_hi=args.events - 1, compact_at_end=False,
-                )
-                wall = time.monotonic() - t0
-                applier.target.compact()
-                totals[method] = sum(s.n_events for s in stats)
-                if not walls[method] or wall < min(walls[method]):
-                    final = applier.target.read()
-                    # decimal(38,0) sum: 20M 64-bit hashes overflow a long
-                    row = final.agg(
-                        F.count("*").alias("n"),
-                        F.sum(
-                            F.xxhash64(*final.columns).cast("decimal(38,0)")
-                        ).alias("fp"),
-                    ).collect()[0]
-                    fingerprints[method] = (row["n"], int(row["fp"]))
-                walls[method].append(round(wall, 3))
-                shutil.rmtree(workdir, ignore_errors=True)
-        for method in methods:
-            best = min(walls[method])
-            out[f"{method}_events_per_sec"] = round(totals[method] / best, 1)
-            out[f"{method}_wall_sec"] = best
-            out[f"{method}_rep_walls"] = walls[method]
-        out["final_state_equal"] = fingerprints["max_by"] == fingerprints["salted"]
-        out["table_rows"] = fingerprints["max_by"][0]
-        print(json.dumps(out))
-        return 0
-
-    if args.mode == "patch":
-        # Patch-ingest throughput (opt-in leg): the same replay loop over a
-        # stream where 40% of non-delete events are sparse updates (op 'P',
-        # pseudo-random written-column subsets), applied into a
-        # merge_engine='partial_update' table. Reports best-of-N events/s
-        # plus an INDEPENDENT DuckDB oracle match of the final state
-        # (cdc/oracle.py:expected_patch_state) — throughput claims ride on
-        # verified semantics.
-        from data_services_spark.cdc.apply import CdcApplier
-        from data_services_spark.cdc.generator import generate_changes
         from data_services_spark.cdc.oracle import (
+            expected_final_state,
             expected_patch_state,
             table_state_matches,
         )
 
+        skew = args.mode == "skew"
+        if skew:
+            out = {"events": args.events, "hot_pct": 50, "n_hot": 1}
+            shape = {"n_hot": 1, "hot_pct": 50}
+            props = None
+        else:
+            out = {"events": args.events, "patch_pct": 40}
+            shape = {"n_hot": 4, "hot_pct": 20, "patch_pct": 40}
+            props = {"merge_engine": "partial_update"}
         changes = generate_changes(
             spark, args.events, n_convs=max(1000, args.events // 100),
-            max_turns=50, n_hot=4, hot_pct=20, patch_pct=40,
-            partitions=max(32, args.cpus * 4),
+            max_turns=50, partitions=max(32, args.cpus * 4), **shape,
         )
         changes.write.mode("overwrite").parquet(args.changes)
         stream = spark.read.parquet(args.changes)
         chunk_size = max(1, (args.events + args.chunks - 1) // args.chunks)
-        out = {"events": args.events, "patch_pct": 40}
         walls = []
         n_reps = max(1, args.repeats)
         for rep in range(n_reps):
-            workdir = f"{args.workdir}_patch_r{rep}"
+            workdir = f"{args.workdir}_{args.mode}_r{rep}"
             shutil.rmtree(workdir, ignore_errors=True)
             applier = CdcApplier.bootstrap(
-                spark, workdir, bucket_count=args.buckets,
-                target_props={"merge_engine": "partial_update"},
+                spark, workdir, bucket_count=args.buckets, target_props=props,
             )
             t0 = time.monotonic()
             stats = applier.replay(
@@ -331,22 +276,30 @@ def main(argv: list[str] | None = None) -> int:
             total = sum(s.n_events for s in stats)
             if rep < n_reps - 1:
                 shutil.rmtree(workdir, ignore_errors=True)
-        # every rep applies the same input -> identical state; verify a
-        # deterministic 10%-of-keys slice against the independent DuckDB
-        # fold (the fold is per-key, so the slice folds to exactly that
-        # slice of the state; full-state verification lives in the sf0.01
-        # driver gate and the replay_job --verify-oracle probe — at 4M
-        # events with ~800-char texts the full-frame compare is the one
-        # step that cannot fit beside the 48g bench JVM)
-        from pyspark.sql import functions as F
-
+        # every rep applies the same input -> identical state; verify the
+        # deterministic 10%-of-keys slice whose conv_id ends in "0" (it
+        # holds the skew leg's hot key, conv_000000). The fold is per key,
+        # so the oracle over the same slice of the stream folds to exactly
+        # that slice of the state; full-state verification lives in the
+        # sf0.01 driver gate and the replay_job --verify-oracle probe — at
+        # 4M events with ~800-char texts the full-frame compare is the one
+        # step that cannot fit beside the 48g bench JVM
         pdf = applier.target.read().where(
             F.col("conv_id").endswith("0")
         ).toPandas()
-        ok, msg = table_state_matches(
-            pdf, expected_patch_state(args.changes, conv_suffix="0")
-        )
-        shutil.rmtree(f"{args.workdir}_patch_r{n_reps - 1}", ignore_errors=True)
+        if skew:
+            sliced = f"{args.changes}_slice0"
+            stream.where(F.col("conv_id").endswith("0")).write.mode(
+                "overwrite"
+            ).parquet(sliced)
+            ok, msg = table_state_matches(pdf, expected_final_state(sliced))
+            shutil.rmtree(sliced, ignore_errors=True)
+        else:
+            ok, msg = table_state_matches(
+                pdf, expected_patch_state(args.changes, conv_suffix="0")
+            )
+        shutil.rmtree(f"{args.workdir}_{args.mode}_r{n_reps - 1}",
+                      ignore_errors=True)
         best = min(walls)
         out.update(
             events_per_sec=round(total / best, 1),

@@ -41,8 +41,6 @@ def main(argv: list[str] | None = None) -> int:
                          "LSN spaces (Mongo cluster times, byte-offset "
                          "binlog positions)")
     ap.add_argument("--bucket-count", type=int, default=16)
-    ap.add_argument("--dedup-method", default="max_by",
-                    choices=["max_by", "salted", "window"])
     ap.add_argument("--merge-engine", default="lww",
                     choices=["lww", "partial_update", "first_row"],
                     help="bootstrap only: partial_update tables ingest "
@@ -101,7 +99,7 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("need --changes or --generate-events")
 
     kwargs = dict(
-        dedup_method=args.dedup_method, with_lineage=not args.no_lineage,
+        with_lineage=not args.no_lineage,
         compact_threshold=args.compact_threshold or None,
     )
     if args.branch:

@@ -59,8 +59,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--trigger-seconds", type=int, default=None,
                     help="processing-time trigger (default: as fast as possible)")
     ap.add_argument("--bucket-count", type=int, default=16)
-    ap.add_argument("--dedup-method", default="max_by",
-                    choices=["max_by", "salted", "window"])
     ap.add_argument("--compact-threshold", type=int, default=16)
     ap.add_argument("--stop-when-idle", action="store_true",
                     help="process everything available, then stop (cron mode)")
@@ -95,13 +93,11 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("stream_job", cpus=args.cpus)
     if LakeTable.exists(f"{args.root}/transcripts"):
         applier = CdcApplier.load(
-            spark, args.root, dedup_method=args.dedup_method,
-            compact_threshold=args.compact_threshold or None,
+            spark, args.root, compact_threshold=args.compact_threshold or None,
         )
     else:
         applier = CdcApplier.bootstrap(
             spark, args.root, bucket_count=args.bucket_count,
-            dedup_method=args.dedup_method,
             compact_threshold=args.compact_threshold or None,
         )
 

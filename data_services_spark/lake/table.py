@@ -977,20 +977,14 @@ class LakeTable:
             merged = _agg_fold(union, list(keys), list(order), pcols,
                                _agg_fns(snap), keep_tombstones)
         else:
-            payload = F.struct(*[F.col(c) for c in union.columns if c not in keys])
-            rank = F.struct(*[F.col(c) for c in order])
+            from ..cdc.dedup import lww_dedup
+
             # first_row tables resolve by MIN over the order (first-writer-
             # wins); min shares every composition property max has, so the
             # same one-aggregation fold applies
-            _by = (
-                F.min_by
-                if snap.props.get("merge_engine") == "first_row"
-                else F.max_by
-            )
-            winners = (
-                union.groupBy(*keys)
-                .agg(_by(payload, rank).alias("_w"))
-                .select(*keys, "_w.*")
+            first_row = snap.props.get("merge_engine") == "first_row"
+            winners = lww_dedup(
+                union, keys, order, keep="first" if first_row else "last"
             )
             merged = winners if keep_tombstones else winners.where(live)
         merged = merged.select(out_cols)
@@ -2846,14 +2840,9 @@ class LakeTable:
         ``mapInPandas`` over a tiny (bucket, files...) frame — vectorized
         Arrow end to end, the only driver round-trip is the O(buckets)
         result list (same discipline as the LSN offset collect in
-        change_capture)."""
-        if snap.props.get("merge_engine") in ("partial_update", "aggregation"):
-            raise ValueError(
-                f"table {self.path} is a "
-                f"{snap.props['merge_engine']} table: the local "
-                "Arrow rewrite folds plain LWW only — compact via "
-                "strategy='shuffle' (compact() routes there automatically)"
-            )
+        change_capture). Folds LWW and ``first_row`` tables; callers route
+        ``partial_update`` and ``aggregation`` tables through the read
+        fold."""
         keys = snap.props.get("merge_keys", snap.bucket_keys)
         order = snap.props.get("order_cols")
         if not order:
@@ -2864,6 +2853,7 @@ class LakeTable:
         # the last — the only difference between the FWW and LWW rewrites
         first_row = snap.props.get("merge_engine") == "first_row"
         cols = [f.name for f in snap.schema.fields]
+        types = {f.name: f.dataType for f in snap.schema.fields}
         ts_col = order[0]
         commit_rel = os.path.join(_DATA_DIR, token)
         commit_abs = os.path.join(self.path, commit_rel)
@@ -2929,6 +2919,7 @@ class LakeTable:
             import pyarrow as pa
             import pyarrow.compute as pc
             import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import to_arrow_type
 
             for pdf in batches:
                 out = []
@@ -2944,26 +2935,22 @@ class LakeTable:
                     # mirroring the Spark read path's upcast), so a bucket
                     # may legitimately mix int32 and int64 pages
                     tbl = pa.concat_tables(parts, promote_options="permissive")
-                    missing = [c for c in cols if c not in tbl.column_names]
-                    if missing:
-                        raise ValueError(
-                            f"bucket {b}: columns {missing} absent from every "
-                            "file; use compact(strategy='shuffle')"
-                        )
+                    # a column the snapshot gained after every file of
+                    # this bucket was written reads as NULL, as in the
+                    # Spark read path — typed from the snapshot schema
+                    for c in cols:
+                        if c not in tbl.column_names:
+                            tbl = tbl.append_column(
+                                c, pa.nulls(tbl.num_rows, to_arrow_type(types[c]))
+                            )
                     # winner per key = max over (order_cols), exactly the
                     # max_by(struct(order)) the read path uses: stable
-                    # ascending sort on keys+order, keep the last of each
-                    # key run (lsn is a total order, so ties cannot occur)
+                    # ascending sort on keys+order with NULLs first (Spark's
+                    # struct ordering), keep the last row of each key (lsn
+                    # is a total order, so ties cannot occur).
+                    # duplicated() puts NULL keys in one group, as Spark's
+                    # groupBy does.
                     kdf = tbl.select(list(keys) + list(order)).to_pandas()
-                    if bool(kdf[list(keys)].isna().any().any()):
-                        # run-detection below would split a NULL key into
-                        # per-row groups where the groupBy path unifies them
-                        # (CDC validate quarantines null keys upstream, but
-                        # compact() is callable on any table)
-                        raise ValueError(
-                            f"bucket {b}: NULL merge key present; "
-                            "use compact(strategy='shuffle')"
-                        )
                     if int(n_shards) > 1:
                         # hot-bucket shard: keep only this task's keys.
                         # hash_pandas_object is deterministic (fixed
@@ -2982,18 +2969,12 @@ class LakeTable:
                         tbl = tbl.filter(pa.array(mask))
                         kdf = kdf[mask].reset_index(drop=True)
                     sorted_kdf = kdf.sort_values(
-                        list(keys) + list(order), kind="stable"
+                        list(keys) + list(order), kind="stable",
+                        na_position="first",
                     )
-                    karr = sorted_kdf[list(keys)].to_numpy()
-                    if len(karr) == 0:
-                        out.append((int(b), None, 0, 0))
-                        continue
-                    run_break = (karr[1:] != karr[:-1]).any(axis=1)
-                    is_win = (
-                        np.append(True, run_break)
-                        if first_row
-                        else np.append(run_break, True)
-                    )
+                    is_win = ~sorted_kdf.duplicated(
+                        list(keys), keep="first" if first_row else "last"
+                    ).to_numpy()
                     win = tbl.take(pa.array(sorted_kdf.index.to_numpy()[is_win]))
                     n_tomb = 0
                     if "op" in win.column_names:
@@ -3084,7 +3065,6 @@ class LakeTable:
         self,
         buckets: list[int] | None = None,
         summary: dict[str, Any] | None = None,
-        strategy: str = "local",
         max_task_bytes: int | None = None,
     ) -> Snapshot:
         """Materialise delta layers back into base files (Iceberg
@@ -3094,27 +3074,25 @@ class LakeTable:
         defaults to carrying the previous snapshot's summary forward so
         offsets survive maintenance commits.
 
-        ``strategy='local'`` (default) exploits the physical layout: base
-        and delta files are already bucketed by the same key hash, so every
+        LWW and ``first_row`` tables exploit the physical layout: base and
+        delta files are already bucketed by the same key hash, so every
         merge key's rows live in ONE bucket's files — compaction is
         embarrassingly parallel per bucket and needs **no shuffle at all**.
-        One map task per bucket reads its files (Arrow), resolves LWW
-        locally, writes one sorted file. This is exactly Iceberg's
-        ``rewrite_data_files`` file-group shape; the cluster-wide
-        groupBy-shuffle the ``'shuffle'`` strategy pays (full table through
-        the exchange) is replaced by a map-only job, so compaction scales
-        with cores like the scan itself. Memory bound: one bucket per task
-        — ``bucket_count`` is sized so a bucket fits an executor (the same
-        contract Iceberg file groups have); ``'shuffle'`` remains the
-        fallback for tables whose buckets outgrew their sizing.
+        One map task per bucket reads its files (Arrow), resolves the fold
+        locally, writes one sorted file — Iceberg's ``rewrite_data_files``
+        file-group shape, so compaction scales with cores like the scan
+        itself. ``partial_update`` and ``aggregation`` tables compact
+        through the read fold (per-column writer ranks / merge functions).
 
-        Hot buckets over ``max_task_bytes`` (default: 2x the median
-        bucket's bytes, floor 32 MiB) additionally split into key-hash
-        SHARDS — one task per shard, each keeping only its own keys, so
-        a skewed bucket stops being a parallelism ceiling (Iceberg's
-        oversized-file-group split). Per-key LWW is unaffected: the hash
-        is deterministic, so every key's rows resolve in exactly one
-        shard."""
+        Memory bound: one bucket per task — ``bucket_count`` is sized so a
+        bucket fits an executor. Hot buckets over ``max_task_bytes``
+        (default: 2x the median bucket's bytes, floor 32 MiB) split into
+        key-hash SHARDS — one task per shard, each keeping only its own
+        keys, so a skewed bucket stops being a parallelism ceiling
+        (Iceberg's oversized-file-group split); per-key resolution is
+        unaffected because the hash is deterministic. A table whose
+        buckets outgrew their sizing is re-hashed to more buckets with
+        :meth:`rebucket` (``maintain_job --rebucket``)."""
         snap = self.snapshot()
         targets = snap.delta_buckets()
         if buckets is not None:
@@ -3122,55 +3100,26 @@ class LakeTable:
             targets = [b for b in targets if b in want]
         if not targets:
             return snap
-        if snap.props.get("merge_engine") in ("partial_update", "aggregation"):
-            # the per-bucket Arrow rewrite folds plain LWW; the patch and
-            # aggregation folds (per-column writer ranks / per-column merge
-            # functions) live in the read path, which the shuffle strategy
-            # compacts through
-            strategy = "shuffle"
         token = f"c{snap.snapshot_id + 1}-{uuid.uuid4().hex[:12]}"
-        if strategy == "local":
+        if snap.props.get("merge_engine") in ("partial_update", "aggregation"):
+            merged = self.read(buckets=targets, keep_tombstones=True)
+            # the fold's output is hash-partitioned on the merge keys, which
+            # with a murmur3-bucketed table already clusters whole buckets
+            # (every target is delta-bearing, so read() plans no plain scan)
+            merge_keys = snap.props.get("merge_keys", snap.bucket_keys)
+            new_files = self._write_data_files(
+                self._with_bucket(merged), token, merge_keys,
+                pre_partitioned=self.co_partitioned_write_ok(merge_keys),
+            )
+            # kept tombstones are not cheaply countable here; a
+            # delta-bearing bucket may hold 'D' winners, so flag
+            # conservatively (costs only the delete-free fast path)
+            tombs = True
+        else:
             new_files, n_tombs = self._rewrite_buckets_local(
                 snap, targets, token, max_task_bytes=max_task_bytes
             )
-            target_set = set(targets)
-            for b in targets:
-                new_files.setdefault(str(b), [])
-            carried = {
-                b: fs for b, fs in snap.bucket_files.items()
-                if int(b) not in target_set
-            }
-            deltas = {
-                b: fs for b, fs in snap.delta_files.items()
-                if int(b) not in target_set
-            }
-            return self._commit(
-                "compact", new_files, carried, snap.schema,
-                snap.summary if summary is None else summary,
-                snap.snapshot_id, delta_files=deltas,
-                props_update=(
-                    {"base_tombstones": True}
-                    if n_tombs or snap.props.get("base_tombstones")
-                    else None
-                ),
-            )
-        merged = self.read(buckets=targets, keep_tombstones=True)
-        sort_cols = snap.props.get("merge_keys", snap.bucket_keys)
-        # compaction of delta-bearing buckets reads through the LWW merge
-        # aggregation, whose output is hash-partitioned on the merge keys —
-        # with a murmur3-bucketed table that already clusters whole buckets.
-        # The skip is only sound when EVERY selected bucket is delta-bearing
-        # (pure aggregate plan): read() gives clean buckets a plain file
-        # scan, which is NOT hash-partitioned on the merge keys. targets is
-        # built from delta_buckets() so this holds today; the explicit guard
-        # keeps the invariant if the selection logic ever changes.
-        merge_keys = snap.props.get("merge_keys", snap.bucket_keys)
-        pre_part = self.co_partitioned_write_ok(merge_keys) and all(
-            snap.delta_files.get(str(b)) for b in targets
-        )
-        new_files = self._write_data_files(
-            self._with_bucket(merged), token, sort_cols, pre_partitioned=pre_part
-        )
+            tombs = bool(n_tombs)
         target_set = set(targets)
         for b in targets:
             new_files.setdefault(str(b), [])
@@ -3184,12 +3133,9 @@ class LakeTable:
             "compact", new_files, carried, snap.schema,
             snap.summary if summary is None else summary,
             snap.snapshot_id, delta_files=deltas,
-            # the shuffle fallback cannot cheaply count kept tombstones; a
-            # delta-bearing bucket may contain 'D' winners, so flag
-            # conservatively (costs only the delete-free fast path)
             props_update=(
                 {"base_tombstones": True}
-                if targets or snap.props.get("base_tombstones")
+                if tombs or snap.props.get("base_tombstones")
                 else None
             ),
         )

@@ -27,8 +27,9 @@ Mongo — ``sources/envelopes.py``) as pure column expressions, and
 ids ride the lake's atomic snapshot commits, so a redelivered micro-batch
 (checkpoint replay, broker rebalance re-read) is a no-op. Partition-skew
 note: bus partition count does NOT bound apply parallelism — the apply
-path hash-repartitions by the table's bucket keys (with hot-key salting)
-regardless of how few bus partitions the stream arrived on.
+path hash-repartitions by the table's bucket keys regardless of how few
+bus partitions the stream arrived on, and a hot key's events collapse in
+the dedup's map-side partial aggregation before that shuffle.
 
 Reference analogue: the reference's transport layer is cron-driven rsync/
 lftp mirrors (``ARGO/rsync.sh:14-43``) — files on disk standing in for a
@@ -226,7 +227,7 @@ def start_bus_apply_stream(
     """bus → envelope decode → exactly-once CDC apply, one streaming query.
 
     The decode is pure column expressions, so it fuses into the micro-batch
-    scan stage; the apply side is the same validated/salted/LWW loop the
+    scan stage; the apply side is the same validate/LWW loop the
     batch surface uses, with epoch-id idempotence for redelivery."""
     from .stream_apply import start_apply_stream
 

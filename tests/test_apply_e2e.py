@@ -140,43 +140,26 @@ def test_schema_evolution_mid_stream(spark, tmp_path):
     assert pre.where(F.col("tool_call_id").isNotNull()).count() == 0
 
 
-def test_salted_dedup_end_to_end(spark, changes_path, tmp_path):
-    """Hot-key stream applied with the explicit two-phase salted dedup gives
-    the same final state."""
-    applier = CdcApplier.bootstrap(
-        spark, str(tmp_path / "lake"), bucket_count=8, dedup_method="salted"
-    )
-    changes = spark.read.parquet(changes_path)
-    applier.replay(changes, chunk_size=5000)
-    ok, msg = table_state_matches(
-        _final_state(applier), expected_final_state(changes_path)
-    )
-    assert ok, msg
-
-
-def test_skewed_stream_salted_equals_maxby(spark, tmp_path):
+def test_skewed_stream_matches_oracle(spark, tmp_path):
     """Pathological skew — 50% of ALL events on ONE conv_id (the bench skew
-    leg's stream shape, SURVEY §3 / reference faimms.py:245-247 one-channel-
-    dominates precedent): the default map-side-combined max_by dedup and the
-    explicit two-phase salted dedup must produce identical final state."""
+    leg's stream shape, reference faimms.py:245-247 one-channel-dominates
+    precedent): the map-side-combined dedup must land exactly the oracle's
+    final state, both as merge-on-read layers and after compaction."""
     stream = generate_changes(
         spark, 6000, n_convs=150, max_turns=25, n_hot=1, hot_pct=50, seed=7
     )
     p = str(tmp_path / "skew.parquet")
     stream.write.parquet(p)
     changes = spark.read.parquet(p)
-    states = {}
-    for method in ("max_by", "salted"):
-        applier = CdcApplier.bootstrap(
-            spark, str(tmp_path / f"lake_{method}"), bucket_count=8,
-            dedup_method=method,
-        )
-        applier.replay(changes, chunk_size=2500)
-        states[method] = _final_state(applier)
-    ok, msg = table_state_matches(states["max_by"], states["salted"])
+    hot = changes.groupBy("conv_id").count().orderBy(F.desc("count")).first()
+    assert hot["count"] >= 0.4 * 6000, hot
+    applier = CdcApplier.bootstrap(spark, str(tmp_path / "lake"), bucket_count=8)
+    applier.replay(changes, chunk_size=2500)
+    exp = expected_final_state(p)
+    ok, msg = table_state_matches(_final_state(applier), exp)
     assert ok, msg
-    # and both match the oracle, not merely each other
-    ok, msg = table_state_matches(states["salted"], expected_final_state(p))
+    applier.target.compact()
+    ok, msg = table_state_matches(_final_state(applier), exp)
     assert ok, msg
 
 

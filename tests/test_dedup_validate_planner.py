@@ -1,4 +1,4 @@
-"""Unit tests: LWW dedup (3 strategies agree + match a pandas oracle),
+"""Unit tests: LWW dedup (matches a pandas oracle),
 validation gates, replay planner truth table."""
 
 from __future__ import annotations
@@ -34,20 +34,9 @@ def _pandas_lww(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.drop_duplicates(subset=["conv_id", "turn_idx"], keep="last")
 
 
-def test_dedup_methods_agree(spark, changes):
-    outs = {}
-    for m in ("max_by", "window", "salted"):
-        df = lww_dedup(changes, method=m).orderBy("conv_id", "turn_idx")
-        outs[m] = df.toPandas().reset_index(drop=True)
-    for m in ("window", "salted"):
-        pd.testing.assert_frame_equal(
-            outs["max_by"], outs[m][outs["max_by"].columns], check_like=False
-        )
-
-
 def test_dedup_matches_pandas_oracle(spark, changes):
     got = (
-        lww_dedup(changes, method="max_by")
+        lww_dedup(changes)
         .orderBy("conv_id", "turn_idx")
         .toPandas()
         .reset_index(drop=True)

@@ -1,9 +1,10 @@
 """Property-based check of the core LWW dedup operator.
 
 For ANY multiset of change events — duplicate keys, duplicate timestamps,
-redelivered rows — all three physical dedup strategies (max_by aggregate,
-salted two-phase, window row_number) must pick exactly the pandas-argmax
-winner per key under (ts, lsn) ordering, with lsn as total tiebreak.
+redelivered rows — both resolution rules of the one map-side-combined
+fold must pick exactly the pandas winner per key under (ts, lsn) ordering,
+with lsn as total tiebreak: ``keep='last'`` the argmax (LWW),
+``keep='first'`` the argmin (``first_row`` tables).
 The reference's dedup rejects tied batches (``bom/wfs.py:103-108``);
 the engine must resolve them deterministically instead — this test is the
 guarantee.
@@ -29,10 +30,11 @@ event = st.tuples(
 )
 
 
-def _pandas_oracle(rows: list[tuple]) -> set[tuple]:
+def _pandas_oracle(rows: list[tuple], keep: str) -> set[tuple]:
     df = pd.DataFrame(rows, columns=["conv", "turn", "off", "lsn"])
     df["rank"] = list(zip(df["off"], df["lsn"]))
-    idx = df.groupby(["conv", "turn"])["rank"].idxmax()
+    by = df.groupby(["conv", "turn"])["rank"]
+    idx = by.idxmax() if keep == "last" else by.idxmin()
     win = df.loc[idx]
     return {(r.conv, r.turn, r.off, r.lsn) for r in win.itertuples()}
 
@@ -51,11 +53,10 @@ def test_all_methods_match_pandas_argmax(spark, rows):
         ],
         "conv_id string, turn_idx int, ts timestamp, lsn long, text string",
     )
-    expected = _pandas_oracle(rows)
-    for method in ("max_by", "salted", "window"):
+    for keep in ("last", "first"):
+        expected = _pandas_oracle(rows, keep)
         got = lww_dedup(
-            sdf, keys=["conv_id", "turn_idx"], order=["ts", "lsn"],
-            method=method, salt_buckets=4,
+            sdf, keys=["conv_id", "turn_idx"], order=["ts", "lsn"], keep=keep,
         ).collect()
         got_set = {
             (int(r.conv_id[1:]), r.turn_idx,
@@ -65,4 +66,4 @@ def test_all_methods_match_pandas_argmax(spark, rows):
         # NB: identical (key, ts, lsn) with different payloads is undefined
         # which copy wins — the generator emits payload deterministic in
         # (c,t,off,lsn), so winners compare exactly.
-        assert got_set == expected, (method, sorted(got_set), sorted(expected))
+        assert got_set == expected, (keep, sorted(got_set), sorted(expected))

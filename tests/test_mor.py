@@ -172,39 +172,132 @@ def test_co_partitioned_write_one_file_per_bucket(spark, changes_path, tmp_path)
         assert len(fs) <= 2, (b, fs)  # at most 1 file per chunk per bucket
 
 
-def test_local_and_shuffle_compaction_identical(spark, changes_path, tmp_path):
-    """The zero-shuffle per-bucket local rewrite (default) and the
-    groupBy-shuffle fallback must produce the SAME table state — rows,
-    schema, and per-bucket file structure discipline (one file per
-    compacted bucket). Covers deletes + additive schema evolution (the
-    generator's tool column is sparse, so some files lack values)."""
+def _visible(table, keys):
+    return (
+        table.read().toPandas().sort_values(keys).reset_index(drop=True)
+    )
+
+
+def _one_file_per_bucket(snap, buckets):
+    for b in buckets:
+        fs = snap.bucket_files.get(str(b), [])
+        assert len(fs) == 1, (b, fs)
+    assert not set(snap.delta_buckets()) & set(buckets)
+
+
+def test_compaction_preserves_read_state(spark, changes_path, tmp_path):
+    """Compaction must materialise exactly the state ``read()`` resolves
+    through the Spark max_by fold over base + deltas: same visible rows
+    and schema, same tombstoned keys, one file per compacted bucket, and
+    still the DuckDB oracle's final state."""
     import pandas as pd
 
-    changes = spark.read.parquet(changes_path)
-    states = {}
-    for strategy in ("local", "shuffle"):
-        applier = CdcApplier.bootstrap(
-            spark, str(tmp_path / f"lake_{strategy}"), bucket_count=8,
-            compact_threshold=None,
+    applier = CdcApplier.bootstrap(
+        spark, str(tmp_path / "lake"), bucket_count=8,
+        compact_threshold=None,
+    )
+    applier.replay(spark.read.parquet(changes_path), chunk_size=2000)
+    t = applier.target
+    keys = ["conv_id", "turn_idx"]
+
+    def dead():
+        return {
+            (r["conv_id"], r["turn_idx"])
+            for r in t.read(keep_tombstones=True).where("op = 'D'").collect()
+        }
+
+    targets = t.snapshot().delta_buckets()
+    before, dead_before = _visible(t, keys), dead()
+    assert dead_before, "stream must carry delete winners"
+    snap = t.compact()
+    _one_file_per_bucket(snap, targets)
+    after = _visible(t, keys)
+    assert list(after.columns) == list(before.columns)
+    pd.testing.assert_frame_equal(after, before)
+    assert dead() == dead_before
+    ok, msg = table_state_matches(after, expected_final_state(changes_path))
+    assert ok, msg
+
+
+def test_compaction_null_fills_columns_absent_from_a_bucket(spark, tmp_path):
+    """One chunk adds a column for one key; a source that lags the schema
+    then touches other keys. Buckets whose files never saw the new column
+    must still compact (the column reads as NULL, as in ``read()``) —
+    through threshold compaction and through tombstone GC."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from data_services_spark.cdc.schemas import CHANGES_SCHEMA
+
+    def events(rows, score=False):
+        df = spark.createDataFrame(
+            [(lsn, op, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=sec),
+              conv, 0, None if op == "D" else "user",
+              None if op == "D" else f"t{lsn}", None)
+             for lsn, op, sec, conv in rows],
+            CHANGES_SCHEMA,
         )
-        applier.replay(changes, chunk_size=2000)
-        applier.target.compact(strategy=strategy)
-        snap = applier.target.snapshot()
-        assert not snap.delta_buckets()
-        pdf = (
-            applier.target.read()
-            .toPandas()
-            .sort_values(["conv_id", "turn_idx"])
-            .reset_index(drop=True)
-        )
-        states[strategy] = (pdf, snap)
-    a, sa = states["local"]
-    b, sb = states["shuffle"]
-    assert list(a.columns) == list(b.columns)
-    pd.testing.assert_frame_equal(a, b, check_like=True)
-    # local rewrite writes exactly one file per delta-bearing bucket
-    for bkt, fs in sa.bucket_files.items():
-        assert len(fs) == 1, (bkt, fs)
+        return df.withColumn("score", F.lit(7).cast("long")) if score else df
+
+    a = CdcApplier.bootstrap(spark, str(tmp_path / "lake"), bucket_count=8,
+                             compact_threshold=2)
+    t = a.target
+    keys = ["conv_id", "turn_idx"]
+    a.apply_chunk(events([(i, "I", i, f"c{i}") for i in range(40)]),
+                  -1, 39, batch_id=0)
+    a.apply_chunk(events([(40, "I", 100, "c0")], score=True), 39, 40, batch_id=1)
+    a.apply_chunk(events([(41, "D", 101, "c39")]), 40, 41, batch_id=2)
+    # the lagging source: no 'score' column at all
+    a.apply_chunk(events([(42 + i, "U", 200, f"c{i}") for i in range(1, 20)]),
+                  41, 61, batch_id=3)
+    before = _visible(t, keys)
+    assert "score" in before.columns
+    hot = [int(b) for b, fs in t.snapshot().delta_files.items() if len(fs) >= 2]
+    a.maybe_compact()
+    _one_file_per_bucket(t.snapshot(), hot)
+    pd.testing.assert_frame_equal(_visible(t, keys), before)
+
+    a.apply_chunk(events([(62 + i, "U", 300, f"c{i}") for i in range(20, 26)]),
+                  61, 67, batch_id=4)
+    before = _visible(t, keys)
+    snap = t.expire_tombstones()
+    assert not snap.delta_files and not snap.props.get("base_tombstones")
+    _one_file_per_bucket(snap, [int(b) for b in snap.bucket_files])
+    after = _visible(t, keys)
+    pd.testing.assert_frame_equal(after, before)
+    assert ("c39", 0) not in set(zip(after["conv_id"], after["turn_idx"]))
+    assert after.loc[after["conv_id"] == "c0", "score"].tolist() == [7]
+
+
+def test_compaction_groups_null_merge_keys(spark, tmp_path):
+    """A delta-bearing bucket holding NULL merge-key rows compacts to
+    exactly what ``read()`` resolved: Spark's groupBy folds every NULL key
+    into ONE group, and NULL order values rank lowest."""
+    from pyspark.sql import types as T
+
+    from data_services_spark.lake import LakeTable
+
+    schema = T.StructType([
+        T.StructField("k", T.StringType(), True),
+        T.StructField("i", T.IntegerType(), True),
+        T.StructField("v", T.StringType(), True),
+    ])
+    t = LakeTable.create(
+        spark, str(tmp_path / "nk"), schema, ["k"], bucket_count=2,
+        props={"merge_keys": ["k"], "order_cols": ["i"]},
+    )
+    t.append(spark.createDataFrame(
+        [(None, 1, "x"), (None, 2, "y"), ("a", 1, "a1"), ("b", 5, "b5")], schema
+    ))
+    t.append_delta(spark.createDataFrame(
+        [(None, 3, "z"), ("a", 2, "a2"), ("b", None, "b-null")], schema
+    ).withColumn("op", F.lit("U")))
+    before = sorted(map(tuple, t.read().collect()), key=repr)
+    assert before == [("a", 2, "a2"), ("b", 5, "b5"), (None, 3, "z")]
+    snap = t.compact()
+    assert not snap.delta_files
+    assert sorted(map(tuple, t.read().collect()), key=repr) == before
 
 
 def test_crash_between_delta_write_and_commit_is_invisible(spark, changes_path, tmp_path):

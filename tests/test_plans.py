@@ -120,6 +120,27 @@ def test_mor_read_prunes_clean_buckets(spark, tmp_path):
     assert "Union" in plan
 
 
+def test_mor_read_fold_is_partial_max_by_single_exchange(spark, tmp_path):
+    """``read()`` over delta-bearing buckets resolves LWW through the same
+    ``lww_dedup`` plan as the chunk dedup: a partial (map-side) max_by
+    around exactly ONE exchange, no window."""
+    from data_services_spark.cdc.apply import CdcApplier
+    from data_services_spark.cdc.generator import generate_changes
+
+    applier = CdcApplier.bootstrap(
+        spark, str(tmp_path / "lake"), bucket_count=4, compact_threshold=None,
+    )
+    applier.replay(
+        generate_changes(spark, 2000, n_convs=50, max_turns=10, seed=3),
+        chunk_size=1000,
+    )
+    assert applier.target.snapshot().delta_buckets()
+    plan = _formatted(applier.target.read())
+    assert "partial_max_by" in plan
+    assert "Window" not in plan
+    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1, plan
+
+
 def test_snapshot_diff_lsn_no_single_partition_exchange(spark):
     """snapshot_diff's LSN assignment must never plan a single-partition
     exchange (the global-window sort would); LSNs stay dense, unique, and

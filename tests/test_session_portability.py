@@ -140,7 +140,7 @@ def test_arrow_cast_defends_preexisting_int96_deltas(
     # deltas really did land INT96 — the reproduction is honest
     assert "INT96:None" in _ts_physical_types(os.path.join(root, "transcripts"))
 
-    applier.target.compact(strategy="local")
+    applier.target.compact()
     # compacted base files came out portable INT64 micros despite ns input
     snap = applier.target.snapshot()
     for fs in snap.bucket_files.values():

@@ -1,6 +1,6 @@
 """Delete-tombstone durability: a delete must keep winning against stale
 (older event-time) out-of-order events across EVERY maintenance rewrite —
-compaction (both strategies, including the per-chunk compaction of
+compaction (including the per-chunk compaction of
 ``compact_threshold=1``), copy-on-write merges, and rebucket. GC of
 that memory is only the explicit ``expire_tombstones`` horizon declaration
 (Cassandra gc_grace / Iceberg delete-expiry analogue).
@@ -56,7 +56,7 @@ def test_stale_event_after_compaction_stays_dead(spark, tmp_path, compact_thresh
     a = CdcApplier.bootstrap(spark, str(tmp_path / "lake"), bucket_count=4,
                              compact_threshold=compact_threshold)
     a.replay(_events(spark, SEG1), chunk_size=10, source_hi=3)
-    a.target.compact()  # local strategy: tombstone must survive the rewrite
+    a.target.compact()  # tombstone must survive the rewrite
     assert ("c2", 0) not in _keys(a)
     a.apply_chunk(_events(spark, STALE), lo=3, hi=4, batch_id=10)
     a.maybe_compact()  # threshold 1: the chunk's bucket is rewritten
@@ -67,14 +67,6 @@ def test_stale_event_after_compaction_stays_dead(spark, tmp_path, compact_thresh
     a.apply_chunk(_events(spark, FRESH), lo=4, hi=5, batch_id=11)
     a.maybe_compact()
     assert _keys(a)[("c2", 0)] == "reborn"
-
-
-def test_stale_event_after_shuffle_compaction_stays_dead(spark, tmp_path):
-    a = CdcApplier.bootstrap(spark, str(tmp_path / "sh"), bucket_count=4)
-    a.replay(_events(spark, SEG1), chunk_size=10, source_hi=3)
-    a.target.compact(strategy="shuffle")
-    a.apply_chunk(_events(spark, STALE), lo=3, hi=4, batch_id=10)
-    assert ("c2", 0) not in _keys(a)
 
 
 def test_stale_event_after_rebucket_stays_dead(spark, tmp_path):

@@ -95,7 +95,6 @@ def test_wap_interleavings_match_oracle(spark, tmp_path_factory, rows, data):
         # the global argmax
         return lww_dedup(
             sdf, keys=["conv_id", "turn_idx"], order=["ts", "lsn"],
-            method="max_by",
         )
 
     staged: list[str] = []
