@@ -478,7 +478,7 @@ pseudo-random written-column subsets), replayed into a partial_update
 table at local[32]: **{patch['events_per_sec']:,} events/s** (best of
 reps {patch['rep_walls']}), final state **{patch['oracle_match']}** vs
 the independent DuckDB horizon fold (expected_patch_state,
-{patch['table_rows']:,} rows). Per-event patch rows cost write
+{patch['verified_rows']:,} rows). Per-event patch rows cost write
 amplification ~1 row/event pre-compaction (vs O(changed keys) for LWW);
 the read fold stays one map-side-combinable aggregation.
 """

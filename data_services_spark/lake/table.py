@@ -561,6 +561,23 @@ def _exact_partition_salt(idx_expr: "F.Column", n: int) -> "F.Column":
     return F.element_at(arr, (F.pmod(idx_expr, F.lit(n)) + 1).cast("int"))
 
 
+# The key-restricted changelog (LakeTable.changes_between) folds the
+# changed buckets on the driver while their files total at most this many
+# bytes; a bigger range takes the Spark bucket diff.
+_DRIVER_DIFF_MAX_BYTES = 64 << 20
+
+
+def _files_bytes(paths: list[str]) -> int:
+    """Total on-disk bytes of ``paths`` (a vanished file counts 0)."""
+    n = 0
+    for f in paths:
+        try:
+            n += os.path.getsize(f)
+        except OSError:
+            pass
+    return n
+
+
 def _pin_portable_write_conf(spark: SparkSession) -> None:
     """Pin the session confs the lake format's correctness depends on,
     so the engine works under ANY caller's SparkSession — not just the
@@ -1537,7 +1554,23 @@ class LakeTable:
         full-outer join on the merge keys over the pruned buckets) with
         LSNs assigned from the target's own committed high-watermark
         forward, making the changelog directly replayable into another
-        ``CdcApplier``.
+        ``CdcApplier``. The ``from`` side is read at the target's schema:
+        a column added in the range is NULL there, a widened one upcast.
+
+        **Key-restricted driver diff**: when the range only appended
+        delta layers to the changed buckets (same base files, the
+        ``from`` delta list a prefix of the ``to`` list, same bucketing
+        and merge keys/order) of a plain-LWW or ``first_row`` table, and
+        their files total at most ``_DRIVER_DIFF_MAX_BYTES``, the diff
+        runs in Arrow on the driver with no Spark job (Paimon's
+        ``changelog-producer=input`` makes the same call). It is exact:
+        files are immutable and a bucket's fold depends only on its file
+        set, so a key absent from the added delta files resolves to the
+        same row at both ends. Only the keys in those files are read out
+        of the bucket's files and folded at both ends; the rows, their
+        order, LSNs and schema equal the Spark diff's. Any other range —
+        a compaction, erase or rebucket in it, a reverse range, a bigger
+        one — takes the Spark bucket diff.
 
         ``with_before=True`` adds ``_prev_<col>`` before-image columns
         (Delta CDF update_preimage analogue) — the previous value for U/D
@@ -1564,6 +1597,14 @@ class LakeTable:
         # (incremental MIN/MAX over event time) needs the PREVIOUS ts of
         # U/D rows — the changelog's top-level ts is the after-image for U
         before = payload + (["ts"] if has_ts else []) if with_before else None
+        base_lsn = int(
+            s_to.summary.get("offsets", {}).get("last_lsn", -1)
+        ) + 1
+        layers = self._appended_layers(s_from, s_to, changed)
+        if layers is not None:
+            return self._driver_diff(
+                s_to, layers, keys, payload, before, base_lsn
+            )
 
         def _with_ts(df: DataFrame) -> DataFrame:
             # tables without an event-time column still diff; the changelog
@@ -1576,14 +1617,116 @@ class LakeTable:
         if not changed:
             prev = _with_ts(self.spark.createDataFrame([], s_to.schema))
             return snapshot_diff(prev, prev, keys=keys, before_cols=before)
-        prev = _with_ts(self.read(from_snapshot_id, buckets=changed))
+        frm: int | Snapshot = from_snapshot_id
+        if s_from.schema_json != s_to.schema_json:
+            frm = Snapshot.from_json({**s_from.to_json(), "schema": s_to.schema_json})
+        prev = _with_ts(self.read(frm, buckets=changed))
         cur = _with_ts(self.read(to_id, buckets=changed))
-        base_lsn = int(
-            s_to.summary.get("offsets", {}).get("last_lsn", -1)
-        ) + 1
         return snapshot_diff(
             prev, cur, keys=keys, lsn_start=base_lsn, before_cols=before
         )
+
+    def _appended_layers(
+        self, s_from: Snapshot, s_to: Snapshot, changed: list[int],
+    ) -> list[tuple[list[str], int]] | None:
+        """Per changed bucket, (its files at ``s_to``, how many of them
+        ``s_from`` holds) when ``s_to`` only appended delta layers to
+        ``s_from`` on a plain-LWW or ``first_row`` table and the files fit
+        on the driver (see :meth:`changes_between`); otherwise None."""
+        same = ("merge_keys", "order_cols", "merge_engine")
+        if (
+            s_from.bucket_count != s_to.bucket_count
+            or s_from.bucket_keys != s_to.bucket_keys
+            or any(s_from.props.get(p) != s_to.props.get(p) for p in same)
+            or s_to.props.get("merge_engine", "lww") not in ("lww", "first_row")
+            or not s_to.props.get("order_cols")
+            or any(
+                f.name == "op"
+                or isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
+                for f in s_from.schema.fields + s_to.schema.fields
+            )
+        ):
+            return None
+        layers = []
+        for b in map(str, changed):
+            base = s_to.bucket_files.get(b) or []
+            old = s_from.delta_files.get(b) or []
+            new = s_to.delta_files.get(b) or []
+            if (s_from.bucket_files.get(b) or []) != base or new[: len(old)] != old:
+                return None
+            layers.append((base + new, len(base) + len(old)))
+        paths = [os.path.join(self.path, f) for files, _ in layers for f in files]
+        if _files_bytes(paths) > _DRIVER_DIFF_MAX_BYTES:
+            return None
+        return layers
+
+    def _driver_diff(
+        self,
+        s_to: Snapshot,
+        layers: list[tuple[list[str], int]],
+        keys: list[str],
+        payload: list[str],
+        before: list[str] | None,
+        lsn_start: int,
+    ) -> DataFrame:
+        """The key-restricted changelog of :meth:`changes_between`, folded
+        and diffed in Arrow on the driver; the DataFrame it returns holds
+        the rows (no Spark job runs before it is returned)."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from .fold import concat_bucket, diff_winners, key_groups, last_writer_wins
+
+        order = list(s_to.props["order_cols"])
+        keep = "first" if s_to.props.get("merge_engine") == "first_row" else "last"
+        # both ends at s_to's schema, plus a NULL ts where the table has none
+        types = {f.name: f.dataType for f in s_to.schema.fields}
+        types.setdefault("ts", T.TimestampType())
+        arrow = to_arrow_schema(
+            T.StructType([T.StructField(c, t, True) for c, t in types.items()])
+        )
+        utc = pa.timestamp("us", tz="UTC")
+
+        def _utc(t: pa.Table) -> pa.Table:
+            # INT96 files read back as naive nanos, INT64 ones as UTC micros
+            return t.cast(pa.schema([
+                f.with_type(utc) if pa.types.is_timestamp(f.type) else f
+                for f in t.schema
+            ]), safe=False)
+
+        def _live(t: pa.Table) -> pa.Table:
+            win = last_writer_wins(t, keys, order, keep)
+            dead = pc.fill_null(pc.equal(win.column("op"), "D"), False)
+            return win.filter(pc.invert(dead)).select(arrow.names).cast(arrow)
+
+        fill = {f.name: f.type for f in arrow} | {"op": pa.string()}
+        ends: tuple[list[pa.Table], list[pa.Table]] = (
+            [arrow.empty_table()], [arrow.empty_table()]
+        )
+        for files, n_old in layers:
+            parts = [_utc(pq.read_table(os.path.join(self.path, f))) for f in files]
+            tbl = concat_bucket(parts, fill)
+            # the keys of the added delta files, and their rows everywhere
+            gid = key_groups(tbl, keys)
+            split = sum(p.num_rows for p in parts[:n_old])
+            touched = np.isin(gid, gid[split:])
+            old = touched & (np.arange(tbl.num_rows) < split)
+            ends[0].append(_live(tbl.filter(pa.array(old))))
+            ends[1].append(_live(tbl.filter(pa.array(touched))))
+        out = diff_winners(
+            pa.concat_tables(ends[0]), pa.concat_tables(ends[1]),
+            keys, payload, "ts", before, lsn_start,
+        )
+        # the Spark diff's schema: every column nullable, lsn overwritten
+        # as a long, before-images typed as their column
+        types.update({f"_prev_{c}": types[c] for c in before or []},
+                     op=T.StringType(), lsn=T.LongType())
+        return self.spark.createDataFrame(out, schema=T.StructType([
+            T.StructField(c, types[c], True) for c in out.column_names
+        ]))
 
     # ----------------------------------------------------------------- write
     def _write_data_files(
@@ -2849,11 +2992,20 @@ class LakeTable:
             raise ValueError(
                 f"table {self.path} has delta layers but no order_cols prop"
             )
+        from pyspark import cloudpickle
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        from . import fold
+        from .fold import concat_bucket, last_writer_wins
+
+        # the tasks carry the fold by value: executors need no import of
+        # this package to compact
+        cloudpickle.register_pickle_by_value(fold)
         # first_row tables keep the FIRST of each sorted key run instead of
         # the last — the only difference between the FWW and LWW rewrites
-        first_row = snap.props.get("merge_engine") == "first_row"
+        keep = "first" if snap.props.get("merge_engine") == "first_row" else "last"
         cols = [f.name for f in snap.schema.fields]
-        types = {f.name: f.dataType for f in snap.schema.fields}
+        arrow_types = {f.name: to_arrow_type(f.dataType) for f in snap.schema.fields}
         ts_col = order[0]
         commit_rel = os.path.join(_DATA_DIR, token)
         commit_abs = os.path.join(self.path, commit_rel)
@@ -2867,16 +3019,7 @@ class LakeTable:
             for b in targets
         ]
 
-        def _bucket_bytes(files: list[str]) -> int:
-            n = 0
-            for f in files:
-                try:
-                    n += os.path.getsize(f)
-                except OSError:
-                    pass
-            return n
-
-        sizes = {r[0]: _bucket_bytes(r[1] + r[2]) for r in plain}
+        sizes = {r[0]: _files_bytes(r[1] + r[2]) for r in plain}
         # Hot-bucket sharding: a whole-bucket task is a parallelism CEILING
         # — at 32 cores the 4 hot-conversation buckets (~4x median bytes)
         # alone held the compaction wall above the apply wall. Buckets over
@@ -2919,7 +3062,6 @@ class LakeTable:
             import pyarrow as pa
             import pyarrow.compute as pc
             import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import to_arrow_type
 
             for pdf in batches:
                 out = []
@@ -2929,28 +3071,7 @@ class LakeTable:
                 ):
                     parts = [pq.read_table(f) for f in list(base_files)]
                     parts += [pq.read_table(f) for f in list(delta_files)]
-                    # "permissive" (vs "default") additionally widens
-                    # numerics across files — pre-widen files keep their
-                    # narrow physical type (type widening is metadata-only,
-                    # mirroring the Spark read path's upcast), so a bucket
-                    # may legitimately mix int32 and int64 pages
-                    tbl = pa.concat_tables(parts, promote_options="permissive")
-                    # a column the snapshot gained after every file of
-                    # this bucket was written reads as NULL, as in the
-                    # Spark read path — typed from the snapshot schema
-                    for c in cols:
-                        if c not in tbl.column_names:
-                            tbl = tbl.append_column(
-                                c, pa.nulls(tbl.num_rows, to_arrow_type(types[c]))
-                            )
-                    # winner per key = max over (order_cols), exactly the
-                    # max_by(struct(order)) the read path uses: stable
-                    # ascending sort on keys+order with NULLs first (Spark's
-                    # struct ordering), keep the last row of each key (lsn
-                    # is a total order, so ties cannot occur).
-                    # duplicated() puts NULL keys in one group, as Spark's
-                    # groupBy does.
-                    kdf = tbl.select(list(keys) + list(order)).to_pandas()
+                    tbl = concat_bucket(parts, arrow_types)
                     if int(n_shards) > 1:
                         # hot-bucket shard: keep only this task's keys.
                         # hash_pandas_object is deterministic (fixed
@@ -2958,7 +3079,7 @@ class LakeTable:
                         # same key -> shard assignment and a key's rows
                         # land in exactly ONE shard — per-key LWW intact
                         h = pd.util.hash_pandas_object(
-                            kdf[list(keys)], index=False
+                            tbl.select(list(keys)).to_pandas(), index=False
                         ).to_numpy()
                         mask = (h % np.uint64(int(n_shards))) == np.uint64(
                             int(shard)
@@ -2967,15 +3088,7 @@ class LakeTable:
                             out.append((int(b), None, 0, 0))
                             continue
                         tbl = tbl.filter(pa.array(mask))
-                        kdf = kdf[mask].reset_index(drop=True)
-                    sorted_kdf = kdf.sort_values(
-                        list(keys) + list(order), kind="stable",
-                        na_position="first",
-                    )
-                    is_win = ~sorted_kdf.duplicated(
-                        list(keys), keep="first" if first_row else "last"
-                    ).to_numpy()
-                    win = tbl.take(pa.array(sorted_kdf.index.to_numpy()[is_win]))
+                    win = last_writer_wins(tbl, keys, order, keep)
                     n_tomb = 0
                     if "op" in win.column_names:
                         is_tomb = pc.fill_null(
