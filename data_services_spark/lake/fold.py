@@ -4,7 +4,8 @@ Every merge key's rows live in one bucket's files, so a bucket folds on
 its own: concatenate its files (:func:`concat_bucket`), then keep one
 winner row per key (:func:`last_writer_wins`). Compaction runs the fold
 in a Spark task per bucket; the key-restricted changelog runs it on the
-driver and diffs the two ends with :func:`diff_winners`.
+driver and diffs the two ends with :func:`diff_winners`; a point lookup
+runs it on the driver over the rows :func:`key_in` its key set.
 
 Pure functions over ``pyarrow`` tables: no Spark, no files, no session.
 """
@@ -52,6 +53,26 @@ def last_writer_wins(
     return tbl.take(pa.array(sorted_kdf.index.to_numpy()[is_win]))
 
 
+def not_deleted(tbl: pa.Table) -> pa.Array:
+    """Row mask: ``op`` is not ``'D'`` (a NULL ``op`` is a live row)."""
+    return pc.invert(pc.fill_null(pc.equal(tbl.column("op"), "D"), False))
+
+
+def key_in(tbl: pa.Table, probe: pa.Table) -> np.ndarray:
+    """Row mask: ``tbl``'s ``probe.column_names`` equal some row of
+    ``probe``, as Spark's ``left_semi`` join decides it: equality is not
+    null-safe, so a NULL on either side matches nothing."""
+    cols = probe.column_names
+    valid = np.ones(probe.num_rows, dtype=bool)
+    for k in cols:
+        valid &= pc.is_valid(probe.column(k)).to_numpy(zero_copy_only=False)
+    probe = probe.filter(pa.array(valid))
+    gid = key_groups(
+        pa.concat_tables([tbl.select(cols).cast(probe.schema), probe]), cols
+    )
+    return np.isin(gid[:tbl.num_rows], gid[tbl.num_rows:])
+
+
 def key_groups(tbl: pa.Table, keys: list[str]) -> np.ndarray:
     """Per-row id of the row's key, equal iff the keys are equal
     null-safely (NULL matches NULL), with no hashing and no float cast."""
@@ -90,8 +111,9 @@ def diff_winners(
     :func:`~data_services_spark.sources.change_capture.snapshot_diff`:
     a null-safe full outer join on ``keys``; I when only ``cur`` has the
     key, D when only ``prev`` has it, U when a ``compare_cols`` value
-    differs null-safely (presence is read off ``keys[0]``, as there);
-    keys and ``ts_col`` coalesce ``cur`` over ``prev``; ``_prev_<col>``
+    differs null-safely (a side holds a key when it has a row for it, so
+    a NULL key column still counts as present); keys and ``ts_col``
+    coalesce ``cur`` over ``prev``; ``_prev_<col>``
     carries ``prev``'s value for each of ``before_cols``. Rows come out
     in key order (ascending, NULLs first, strings by byte) with dense
     ``lsn`` from ``lsn_start`` — the order the Spark diff ranks by."""
@@ -105,8 +127,8 @@ def diff_winners(
     p = prev.take(pa.array(at_p, mask=at_p < 0)).combine_chunks()
     c = cur.take(pa.array(at_c, mask=at_c < 0)).combine_chunks()
 
-    in_prev = pc.is_valid(p.column(keys[0]))
-    in_cur = pc.is_valid(c.column(keys[0]))
+    in_prev = pa.array(at_p >= 0)
+    in_cur = pa.array(at_c >= 0)
     changed = pa.array(np.zeros(n_g, dtype=bool))
     for col in compare_cols:
         changed = pc.or_(changed, pc.invert(_same(p.column(col), c.column(col))))

@@ -474,18 +474,22 @@ def _agg_fold(
     return g.select(*keys, *value_cols, *order_cols, *internal)
 
 
-def _murmur3_int(v: int, seed: int = 42) -> int:
-    """Spark's Murmur3_x86_32 hash of a 32-bit int (seed 42) — the exact
-    function ``df.repartition(n, col)`` drives partition assignment with
-    (verified bit-for-bit against ``F.hash`` in tests)."""
-    def rotl(x: int, r: int) -> int:
-        return ((x << r) | ((x & 0xFFFFFFFF) >> (32 - r))) & 0xFFFFFFFF
+# Spark's Murmur3_x86_32 (``org.apache.spark.unsafe.hash``), ported
+# bit-for-bit so the driver routes keys to buckets as ``F.hash`` does;
+# the tests pin it against ``F.hash`` on random keys.
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & 0xFFFFFFFF
 
-    k1 = ((v & 0xFFFFFFFF) * 0xCC9E2D51) & 0xFFFFFFFF
-    k1 = (rotl(k1, 15) * 0x1B873593) & 0xFFFFFFFF
-    h1 = seed ^ k1
-    h1 = (rotl(h1, 13) * 5 + 0xE6546B64) & 0xFFFFFFFF
-    h1 ^= 4
+
+def _mix(h1: int, word: int) -> int:
+    """``mixH1(h1, mixK1(word))`` over unsigned 32-bit values."""
+    k1 = (_rotl((word * 0xCC9E2D51) & 0xFFFFFFFF, 15) * 0x1B873593) & 0xFFFFFFFF
+    return (_rotl(h1 ^ k1, 13) * 5 + 0xE6546B64) & 0xFFFFFFFF
+
+
+def _fmix(h1: int, length: int) -> int:
+    """``fmix(h1, length)``, returned as a signed 32-bit int."""
+    h1 ^= length
     h1 ^= h1 >> 16
     h1 = (h1 * 0x85EBCA6B) & 0xFFFFFFFF
     h1 ^= h1 >> 13
@@ -494,28 +498,82 @@ def _murmur3_int(v: int, seed: int = 42) -> int:
     return h1 - (1 << 32) if h1 >= (1 << 31) else h1
 
 
+def _murmur3_int(v: int, seed: int = 42) -> int:
+    """``hashInt``: Spark's hash of a 32-bit int — the exact function
+    ``df.repartition(n, col)`` drives partition assignment with."""
+    return _fmix(_mix(seed & 0xFFFFFFFF, v & 0xFFFFFFFF), 4)
+
+
+def _murmur3(values: list[Any], types: list[T.DataType], seed: int = 42) -> int:
+    """``F.hash(*cols)`` of one row whose columns are string, int or long:
+    each column hashes with the previous column's hash as its seed, and a
+    NULL leaves the seed unchanged. A long hashes its low then its high
+    word (``hashLong``); a string hashes its UTF-8 bytes as little-endian
+    words, then each tail byte on its own as a SIGNED byte
+    (``hashUnsafeBytes``)."""
+    for v, t in zip(values, types):
+        if v is None:
+            continue
+        if isinstance(t, T.IntegerType):
+            seed = _murmur3_int(v, seed)
+            continue
+        h1 = seed & 0xFFFFFFFF
+        if isinstance(t, T.LongType):
+            h1 = _mix(_mix(h1, v & 0xFFFFFFFF), (v >> 32) & 0xFFFFFFFF)
+            seed = _fmix(h1, 8)
+            continue
+        b = v.encode("utf-8")
+        aligned = len(b) - len(b) % 4
+        for i in range(0, aligned, 4):
+            h1 = _mix(h1, int.from_bytes(b[i:i + 4], "little"))
+        for byte in b[aligned:]:
+            h1 = _mix(h1, byte - 256 if byte >= 128 else byte)
+        seed = _fmix(h1, len(b))
+    return seed
+
+
+def _murmur3_routable(snap: "Snapshot") -> bool:
+    """Whether :func:`_murmur3` reproduces the table's bucket hash: every
+    bucket key is a string, int or long and the table buckets by murmur3."""
+    return snap.bucket_fn == "murmur3" and all(
+        isinstance(snap.schema[k].dataType, (T.StringType, T.IntegerType, T.LongType))
+        for k in snap.bucket_keys
+    )
+
+
 def _row_bucket_fn(snap: "Snapshot"):
     """Driver-side bucket id of a row dict, bit-identical to
-    :func:`_bucket_expr`: a 1-bucket table is bucket 0; otherwise the
-    table must bucket by ONE int key under murmur3, where Spark's
-    ``pmod(hash(k), n)`` is ``_murmur3_int(k) % n`` (a NULL key hashes to
-    the seed, 42). Other key shapes raise ``ValueError``."""
+    :func:`_bucket_expr`: a 1-bucket table is bucket 0; otherwise Spark's
+    ``pmod(hash(keys), n)`` is ``_murmur3(keys) % n``, so the table must be
+    :func:`_murmur3_routable`. Other key shapes raise ``ValueError``."""
     n = snap.bucket_count
     if n == 1:
         return lambda row: 0
     keys = snap.bucket_keys
-    if (
-        snap.bucket_fn != "murmur3"
-        or len(keys) != 1
-        or not isinstance(snap.schema[keys[0]].dataType, T.IntegerType)
-    ):
+    if not _murmur3_routable(snap):
         raise ValueError(
-            f"driver-side bucketing needs one int bucket key under murmur3 "
-            f"or a 1-bucket table; this table buckets {n} ways by {keys} "
-            f"({snap.bucket_fn})"
+            f"driver-side bucketing needs string, int or long bucket keys "
+            f"under murmur3 or a 1-bucket table; this table buckets {n} ways "
+            f"by {keys} ({snap.bucket_fn})"
         )
-    k = keys[0]
-    return lambda row: (42 if row[k] is None else _murmur3_int(row[k])) % n
+    types = [snap.schema[k].dataType for k in keys]
+    return lambda row: _murmur3([row.get(k) for k in keys], types) % n
+
+
+def _check_bucket_keys(snap: "Snapshot", keys: Any) -> None:
+    """Raise ``ValueError`` unless the key set (a DataFrame or a list of
+    dicts) carries every bucket key column."""
+    if isinstance(keys, list):
+        present = set().union(*(d.keys() for d in keys)) if keys else set()
+    else:
+        present = set(keys.columns)
+    missing = [k for k in snap.bucket_keys if k not in present]
+    if missing:
+        raise ValueError(
+            f"lookup needs every bucket key; missing: {missing} "
+            f"(bucket hash covers {snap.bucket_keys} — a key prefix "
+            "cannot prune)"
+        )
 
 
 def _arrow_column(f: T.StructField, arrow_type: Any, values: list[Any]) -> Any:
@@ -561,10 +619,11 @@ def _exact_partition_salt(idx_expr: "F.Column", n: int) -> "F.Column":
     return F.element_at(arr, (F.pmod(idx_expr, F.lit(n)) + 1).cast("int"))
 
 
-# The key-restricted changelog (LakeTable.changes_between) folds the
-# changed buckets on the driver while their files total at most this many
-# bytes; a bigger range takes the Spark bucket diff.
-_DRIVER_DIFF_MAX_BYTES = 64 << 20
+# The driver-side reads (the key-restricted changelog of
+# LakeTable.changes_between, LakeTable.lookup) fold on the driver while the
+# files they select total at most this many bytes; a bigger read takes its
+# Spark plan.
+_DRIVER_READ_MAX_BYTES = 64 << 20
 
 
 def _files_bytes(paths: list[str]) -> int:
@@ -576,6 +635,75 @@ def _files_bytes(paths: list[str]) -> int:
         except OSError:
             pass
     return n
+
+
+def _driver_foldable(snap: "Snapshot") -> bool:
+    """Whether :class:`_DriverFold` reproduces ``read()``'s fold of
+    ``snap``: a plain-LWW or ``first_row`` table with order columns
+    (patch and aggregation tables keep their Spark folds), no ``op`` data
+    column and no nested column."""
+    return (
+        snap.props.get("merge_engine", "lww") in ("lww", "first_row")
+        and bool(snap.props.get("order_cols"))
+        and not any(
+            f.name == "op"
+            or isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
+            for f in snap.schema.fields
+        )
+    )
+
+
+class _DriverFold:
+    """Bucket files of a :func:`_driver_foldable` snapshot read and folded
+    on the driver with pyarrow, by ``read()``'s rules: the one file read
+    and live fold of the driver-side changelog and lookup.
+
+    ``types`` (name -> Spark type) is the output: every column nullable,
+    a column absent from every file read as NULL."""
+
+    def __init__(self, root: str, snap: "Snapshot", types: dict[str, T.DataType]):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self.root = root
+        self.keys = list(snap.props.get("merge_keys", snap.bucket_keys))
+        self.order = list(snap.props.get("order_cols") or [])
+        self.keep = "first" if snap.props.get("merge_engine") == "first_row" else "last"
+        self.arrow = to_arrow_schema(
+            T.StructType([T.StructField(c, t, True) for c, t in types.items()])
+        )
+        self.fill = {f.name: f.type for f in self.arrow} | {"op": pa.string()}
+
+    def read(self, files: list[str]) -> tuple[Any, list[int]]:
+        """(one Arrow table of ``files``, relative to the table root, in
+        order; each file's row count). Timestamps come out as UTC micros:
+        INT96 files read back as naive nanos, INT64 ones as UTC micros."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from .fold import concat_bucket
+
+        utc = pa.timestamp("us", tz="UTC")
+        parts = []
+        for f in files:
+            t = pq.read_table(os.path.join(self.root, f))
+            parts.append(t.cast(pa.schema([
+                fld.with_type(utc) if pa.types.is_timestamp(fld.type) else fld
+                for fld in t.schema
+            ]), safe=False))
+        return concat_bucket(parts, self.fill), [p.num_rows for p in parts]
+
+    def cast(self, tbl: Any) -> Any:
+        """``tbl``'s output columns as the output types."""
+        return tbl.select(self.arrow.names).cast(self.arrow)
+
+    def live(self, tbl: Any) -> Any:
+        """The last (``first_row``: first) writer per merge key of ``tbl``
+        under the order columns, with its ``'D'`` winners dropped."""
+        from .fold import last_writer_wins, not_deleted
+
+        win = last_writer_wins(tbl, self.keys, self.order, self.keep)
+        return self.cast(win.filter(not_deleted(win)))
 
 
 def _pin_portable_write_conf(spark: SparkSession) -> None:
@@ -1019,30 +1147,91 @@ class LakeTable:
 
         ``keys``: a small DataFrame or list of dicts carrying ALL bucket
         key columns (a prefix cannot prune — the bucket hash covers every
-        key column). The key set is broadcast; LWW delta resolution and
-        tombstone semantics are ``read``'s, unchanged."""
+        key column). The result is ``read()`` of the keys' buckets
+        semi-joined with the key set: LWW delta resolution and tombstone
+        semantics are ``read``'s, and a NULL key matches nothing.
+
+        **On the driver**: the keys route to their buckets through the
+        driver's port of Spark's Murmur3 (:func:`_murmur3`), and those
+        buckets' files are read, filtered to the keys and folded in Arrow
+        (:class:`_DriverFold`), so no Spark job runs before the frame is
+        returned; a DataFrame key set is collected once first. The Spark
+        plan (``read(buckets)`` semi-joined with the key frame) serves a
+        table with a ``partial_update`` or ``aggregation`` merge engine,
+        no order columns, ``op`` as a data column, a nested column,
+        ``xxhash64`` bucketing or a bucket key that is not a string, int
+        or long, and a read whose files total more than
+        ``_DRIVER_READ_MAX_BYTES``."""
         snap = self.snapshot()
+        _check_bucket_keys(snap, keys)
+        bkeys = list(snap.bucket_keys)
+        if _driver_foldable(snap) and _murmur3_routable(snap):
+            if not isinstance(keys, list):
+                keys = [r.asDict() for r in keys.select(*[
+                    F.col(k).cast(snap.schema[k].dataType).alias(k) for k in bkeys
+                ]).collect()]
+            found = self._driver_lookup(snap, keys)
+            if found is not None:
+                return found
         kdf, buckets = self._key_frame(snap, keys)
         return self.read(snapshot_id=snap.snapshot_id, buckets=buckets).join(
-            F.broadcast(kdf), on=list(snap.bucket_keys), how="left_semi"
+            F.broadcast(kdf), on=bkeys, how="left_semi"
         )
+
+    def _driver_lookup(self, snap: Snapshot, keys: list[dict]) -> DataFrame | None:
+        """:meth:`lookup` in Arrow on the driver, or None when the keys'
+        buckets hold more than ``_DRIVER_READ_MAX_BYTES``. The rows of the
+        keys' buckets whose bucket keys equal one of ``keys``
+        (:func:`fold.key_in`), by ``read()``'s rules: a bucket without
+        delta layers is a plain scan (duplicates stay, ``'D'`` rows drop
+        only under ``base_tombstones``), a delta-bearing bucket takes the
+        live fold. The DataFrame it returns holds the rows (no Spark job
+        runs before it is returned) and has ``read()``'s schema."""
+        import pyarrow as pa
+
+        from .fold import key_in, not_deleted
+
+        bucket_of = _row_bucket_fn(snap)
+        by_fold: dict[bool, list[str]] = {False: [], True: []}
+        for b in map(str, sorted({bucket_of(r) for r in keys})):
+            deltas = snap.delta_files.get(b) or []
+            by_fold[bool(deltas)] += (snap.bucket_files.get(b) or []) + deltas
+        paths = [os.path.join(self.path, f) for fs in by_fold.values() for f in fs]
+        if _files_bytes(paths) > _DRIVER_READ_MAX_BYTES:
+            return None
+        fold = _DriverFold(
+            self.path, snap, {f.name: f.dataType for f in snap.schema.fields}
+        )
+        probe = pa.table({
+            k: pa.array([r.get(k) for r in keys], fold.arrow.field(k).type)
+            for k in snap.bucket_keys
+        })
+        parts = []
+        for folded, files in by_fold.items():
+            if not files:
+                continue
+            tbl, _ = fold.read(files)
+            tbl = tbl.filter(pa.array(key_in(tbl, probe)))
+            if folded:
+                parts.append(fold.live(tbl))
+            elif snap.props.get("base_tombstones"):
+                parts.append(fold.cast(tbl.filter(not_deleted(tbl))))
+            else:
+                parts.append(fold.cast(tbl))
+        if not parts:  # read() of buckets that hold no file
+            return self.spark.createDataFrame([], snap.schema)
+        # a parquet scan reads every column nullable
+        return self.spark.createDataFrame(pa.concat_tables(parts), schema=T.StructType([
+            T.StructField(f.name, f.dataType, True) for f in snap.schema.fields
+        ]))
 
     def _key_frame(
         self, snap: Snapshot, keys: DataFrame | list[dict],
     ) -> tuple[DataFrame, list[int]]:
         """Normalize an explicit key set to (typed key frame, the distinct
-        buckets those keys hash to)."""
-        if isinstance(keys, list):
-            present = set().union(*(d.keys() for d in keys)) if keys else set()
-        else:
-            present = set(keys.columns)
-        missing = [k for k in snap.bucket_keys if k not in present]
-        if missing:
-            raise ValueError(
-                f"lookup needs every bucket key; missing: {missing} "
-                f"(bucket hash covers {snap.bucket_keys} — a key prefix "
-                "cannot prune)"
-            )
+        buckets those keys hash to). A list of keys routes to buckets on
+        the driver (:func:`_row_bucket_fn`) where the table allows it."""
+        _check_bucket_keys(snap, keys)
         if isinstance(keys, list):
             kdf = self.spark.createDataFrame(
                 keys, T.StructType([
@@ -1060,6 +1249,11 @@ class LakeTable:
         kdf = kdf.select(
             *[F.col(k).cast(key_types[k]).alias(k) for k in snap.bucket_keys]
         ).dropDuplicates()
+        if isinstance(keys, list) and (
+            snap.bucket_count == 1 or _murmur3_routable(snap)
+        ):
+            bucket_of = _row_bucket_fn(snap)
+            return kdf, sorted({bucket_of(r) for r in keys})
         buckets = sorted(
             int(r["b"])
             for r in kdf.select(
@@ -1561,7 +1755,7 @@ class LakeTable:
         delta layers to the changed buckets (same base files, the
         ``from`` delta list a prefix of the ``to`` list, same bucketing
         and merge keys/order) of a plain-LWW or ``first_row`` table, and
-        their files total at most ``_DRIVER_DIFF_MAX_BYTES``, the diff
+        their files total at most ``_DRIVER_READ_MAX_BYTES``, the diff
         runs in Arrow on the driver with no Spark job (Paimon's
         ``changelog-producer=input`` makes the same call). It is exact:
         files are immutable and a bucket's fold depends only on its file
@@ -1638,13 +1832,7 @@ class LakeTable:
             s_from.bucket_count != s_to.bucket_count
             or s_from.bucket_keys != s_to.bucket_keys
             or any(s_from.props.get(p) != s_to.props.get(p) for p in same)
-            or s_to.props.get("merge_engine", "lww") not in ("lww", "first_row")
-            or not s_to.props.get("order_cols")
-            or any(
-                f.name == "op"
-                or isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
-                for f in s_from.schema.fields + s_to.schema.fields
-            )
+            or not (_driver_foldable(s_from) and _driver_foldable(s_to))
         ):
             return None
         layers = []
@@ -1656,7 +1844,7 @@ class LakeTable:
                 return None
             layers.append((base + new, len(base) + len(old)))
         paths = [os.path.join(self.path, f) for files, _ in layers for f in files]
-        if _files_bytes(paths) > _DRIVER_DIFF_MAX_BYTES:
+        if _files_bytes(paths) > _DRIVER_READ_MAX_BYTES:
             return None
         return layers
 
@@ -1674,48 +1862,25 @@ class LakeTable:
         the rows (no Spark job runs before it is returned)."""
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
-        from .fold import concat_bucket, diff_winners, key_groups, last_writer_wins
+        from .fold import diff_winners, key_groups
 
-        order = list(s_to.props["order_cols"])
-        keep = "first" if s_to.props.get("merge_engine") == "first_row" else "last"
         # both ends at s_to's schema, plus a NULL ts where the table has none
         types = {f.name: f.dataType for f in s_to.schema.fields}
         types.setdefault("ts", T.TimestampType())
-        arrow = to_arrow_schema(
-            T.StructType([T.StructField(c, t, True) for c, t in types.items()])
-        )
-        utc = pa.timestamp("us", tz="UTC")
-
-        def _utc(t: pa.Table) -> pa.Table:
-            # INT96 files read back as naive nanos, INT64 ones as UTC micros
-            return t.cast(pa.schema([
-                f.with_type(utc) if pa.types.is_timestamp(f.type) else f
-                for f in t.schema
-            ]), safe=False)
-
-        def _live(t: pa.Table) -> pa.Table:
-            win = last_writer_wins(t, keys, order, keep)
-            dead = pc.fill_null(pc.equal(win.column("op"), "D"), False)
-            return win.filter(pc.invert(dead)).select(arrow.names).cast(arrow)
-
-        fill = {f.name: f.type for f in arrow} | {"op": pa.string()}
+        fold = _DriverFold(self.path, s_to, types)
         ends: tuple[list[pa.Table], list[pa.Table]] = (
-            [arrow.empty_table()], [arrow.empty_table()]
+            [fold.arrow.empty_table()], [fold.arrow.empty_table()]
         )
         for files, n_old in layers:
-            parts = [_utc(pq.read_table(os.path.join(self.path, f))) for f in files]
-            tbl = concat_bucket(parts, fill)
+            tbl, sizes = fold.read(files)
             # the keys of the added delta files, and their rows everywhere
             gid = key_groups(tbl, keys)
-            split = sum(p.num_rows for p in parts[:n_old])
+            split = sum(sizes[:n_old])
             touched = np.isin(gid, gid[split:])
             old = touched & (np.arange(tbl.num_rows) < split)
-            ends[0].append(_live(tbl.filter(pa.array(old))))
-            ends[1].append(_live(tbl.filter(pa.array(touched))))
+            ends[0].append(fold.live(tbl.filter(pa.array(old))))
+            ends[1].append(fold.live(tbl.filter(pa.array(touched))))
         out = diff_winners(
             pa.concat_tables(ends[0]), pa.concat_tables(ends[1]),
             keys, payload, "ts", before, lsn_start,
@@ -2216,8 +2381,8 @@ class LakeTable:
 
         Every row must carry exactly the table's columns. Bucket ids are
         computed driver-side (:func:`_row_bucket_fn`), so the table is
-        either 1-bucket or bucketed by one int key; anything else raises
-        ``ValueError``. A crash between the file write and the commit
+        either 1-bucket or bucketed under murmur3 by string, int and long
+        keys; anything else raises ``ValueError``. A crash between the file write and the commit
         leaves unreferenced files that ``remove_orphan_files`` reclaims."""
         import pyarrow as pa
         import pyarrow.parquet as pq

@@ -670,7 +670,8 @@ def engine_changelog_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cross product covers turn_idx 0..36 exactly, so the SQL filter "
         "on conv_id alone is the same predicate); the oracle filters the "
         "full LWW state. tests/test_lake_table.py pins that a needle "
-        "lookup scans a strict subset of the files a full read opens.",
+        "lookup opens a strict subset of the files a full read scans, "
+        "all in the needle's bucket.",
 )
 def engine_key_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile

@@ -55,13 +55,14 @@ def snapshot_diff(
     compare_cols = compare_cols or [
         c for c in current.columns if c not in keys and c != ts_col
     ]
-    p = previous.alias("p")
-    c = current.alias("c")
+    # a per-side presence marker: a key column may itself be NULL
+    p = previous.withColumn("_in_p", F.lit(True)).alias("p")
+    c = current.withColumn("_in_c", F.lit(True)).alias("c")
     cond = [F.col(f"p.{k}").eqNullSafe(F.col(f"c.{k}")) for k in keys]
     joined = p.join(c, cond, "full_outer")
 
-    in_prev = F.col(f"p.{keys[0]}").isNotNull()
-    in_cur = F.col(f"c.{keys[0]}").isNotNull()
+    in_prev = F.col("p._in_p").isNotNull()
+    in_cur = F.col("c._in_c").isNotNull()
     changed = F.lit(False)
     for col in compare_cols:
         changed = changed | ~F.col(f"p.{col}").eqNullSafe(F.col(f"c.{col}"))

@@ -57,12 +57,12 @@ def _delta(spark, t, rows, hi):
 @contextlib.contextmanager
 def _bucket_diff():
     """Force the Spark bucket diff (no range fits a negative byte cap)."""
-    cap = table_mod._DRIVER_DIFF_MAX_BYTES
-    table_mod._DRIVER_DIFF_MAX_BYTES = -1
+    cap = table_mod._DRIVER_READ_MAX_BYTES
+    table_mod._DRIVER_READ_MAX_BYTES = -1
     try:
         yield
     finally:
-        table_mod._DRIVER_DIFF_MAX_BYTES = cap
+        table_mod._DRIVER_READ_MAX_BYTES = cap
 
 
 def _nan_safe(tbl):
@@ -162,7 +162,7 @@ def test_ranges_that_rewrite_files_take_the_bucket_diff(spark, tmp_path, monkeyp
     s4 = t.current_snapshot_id()
     _delta(spark, t, [("d", 3, "w2", 4, 8, 21, "U")], 21)
     assert t.changes_between(s4).count() == 1 and len(calls) == 2
-    monkeypatch.setattr(table_mod, "_DRIVER_DIFF_MAX_BYTES", 1)
+    monkeypatch.setattr(table_mod, "_DRIVER_READ_MAX_BYTES", 1)
     assert fallback(s4) == {("d", "U")}  # over the driver's byte cap
 
 
@@ -280,3 +280,27 @@ def test_stale_event_after_delete_stays_deleted_in_both_paths(spark, tmp_path):
     got, want, _, _ = _both(t, s1, None, True)
     assert got.equals(want)
     assert [(r["k"], r["op"]) for r in got.to_pylist()] == [("a", "D")]
+
+
+def test_null_first_merge_key_is_inserted_then_deleted(spark, tmp_path):
+    """A key whose FIRST merge key column is NULL changes as I then D on
+    both paths: presence comes from the side's row, not from ``keys[0]``
+    (which gave U, U — a consumer would upsert NULLs instead of deleting)."""
+    t = _create(spark, str(tmp_path / "lake"))
+    _delta(spark, t, ROWS, 3)
+    s0 = t.current_snapshot_id()
+    _delta(spark, t, [(None, 1, "x", 9, 1, 4, "I")], 4)
+    s1 = t.current_snapshot_id()
+    _delta(spark, t, [(None, 1, None, 9, 2, 5, "D")], 5)
+    s2 = t.current_snapshot_id()
+    for frm, to, want in ((s0, s1, [(None, 1, "x", "I")]),
+                          (s1, s2, [(None, 1, None, "D")])):
+        for with_before in (False, True):
+            got, slow, fast_schema, slow_schema = _both(t, frm, to, with_before)
+            assert got.equals(slow) and fast_schema == slow_schema
+            assert [(r["k"], r["j"], r["v"], r["op"]) for r in got.to_pylist()] == want
+    # a NULL second key column still diffs as before
+    _delta(spark, t, [("a", None, "y", 9, 3, 6, "I")], 6)
+    got, slow, _, _ = _both(t, s2, None, False)
+    assert got.equals(slow)
+    assert [(r["k"], r["j"], r["op"]) for r in got.to_pylist()] == [("a", None, "I")]

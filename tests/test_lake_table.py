@@ -3,6 +3,8 @@ additive schema evolution, snapshot expiry, commit conflicts."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -331,7 +333,7 @@ def test_describe_metadata_only_health(spark, tmp_table_dir):
     assert d2["n_delta_files"] == 0 and d2["base_tombstones"] is True
 
 
-def test_lookup_point_read_prunes_and_resolves_lww(spark, tmp_table_dir):
+def test_lookup_point_read_prunes_and_resolves_lww(spark, tmp_table_dir, monkeypatch):
     t = LakeTable.create(
         spark, tmp_table_dir, SCHEMA, ["k"], bucket_count=8,
         props={"merge_keys": ["k"], "order_cols": ["i"]},
@@ -347,11 +349,30 @@ def test_lookup_point_read_prunes_and_resolves_lww(spark, tmp_table_dir):
         [{"k": "k3"}, {"k": "k5"}, {"k": "k19"}, {"k": "missing"}]
     ).collect()}
     assert got == {("k3", 2, "v3b"), ("k19", 1, "v19")}
-    # pruning: a single-key lookup scans a strict subset of the files a
-    # full read opens (one bucket of eight)
-    full_files = set(t.read().inputFiles())
-    needle_files = set(t.lookup([{"k": "k19"}]).inputFiles())
+    # pruning: a single-key lookup opens a strict subset of the files a
+    # full read scans, all of them in the needle's bucket (one of eight)
+    from urllib.parse import unquote, urlparse
+
+    from data_services_spark.lake import table as table_mod
+    from data_services_spark.lake.table import _bucket_expr
+
+    opened = []
+    real_read = table_mod._DriverFold.read
+
+    def spy(self, files):
+        opened.extend(files)
+        return real_read(self, files)
+
+    monkeypatch.setattr(table_mod._DriverFold, "read", spy)
+    assert [r.v for r in t.lookup([{"k": "k19"}]).collect()] == ["v19"]
+    full_files = {unquote(urlparse(u).path) for u in t.read().inputFiles()}
+    needle_files = {os.path.join(t.path, f) for f in opened}
     assert needle_files and needle_files < full_files
+    b = spark.createDataFrame([("k19",)], "k string").select(
+        _bucket_expr(["k"], 8).alias("b")).first().b
+    snap = t.snapshot()
+    in_bucket = snap.bucket_files[str(b)] + snap.delta_files.get(str(b), [])
+    assert set(opened) <= set(in_bucket)
     # a key prefix cannot prune: missing bucket key is an explicit error
     t2 = LakeTable.create(
         spark, tmp_table_dir + "_2", SCHEMA, ["k", "i"], bucket_count=4,
@@ -582,6 +603,19 @@ def test_append_rows_matches_spark_append_metrics(spark, tmp_path):
     on_disk = _bucket_keys_on_disk(drv, "v")
     assert on_disk == _bucket_keys_on_disk(ref, "v")
     assert on_disk == {2: ["n"], 3: ["x"], 1: ["y"]}
+    # string, long and composite keys land where Spark puts them too
+    srows = [{"k": k, "i": i, "v": f"{k}{i}"}
+             for k in ("a", "é", "日本", "", "\U0001F600z") for i in (0, 7, -3)]
+    for name, schema, keys, rows, col in (
+        ("s", SCHEMA, ["k"], srows, "v"),
+        ("c", SCHEMA, ["i", "k"], srows, "v"),
+        ("l", METRICS_SCHEMA, ["batch_id"], _metrics_rows(), "batch_id"),
+    ):
+        drv = LakeTable.create(spark, str(tmp_path / f"drv_{name}"), schema, keys, 4)
+        ref = LakeTable.create(spark, str(tmp_path / f"ref_{name}"), schema, keys, 4)
+        drv.append_rows(rows)
+        ref.append(spark.createDataFrame(rows, schema))
+        assert _bucket_keys_on_disk(drv, col) == _bucket_keys_on_disk(ref, col)
 
 
 def test_append_rows_rejects_bad_rows_and_key_shapes(spark, tmp_path):
@@ -601,16 +635,19 @@ def test_append_rows_rejects_bad_rows_and_key_shapes(spark, tmp_path):
         # nothing lands
         lin.append_rows(_lineage_rows()[:4] + [{**row, "source_partition": 3,
                                                 "batch_id": None}])
-    # multi-bucket tables need ONE int key: a string key, a long key and
-    # a composite key all refuse (Spark hashes them differently)
-    for name, schema, keys in (
-        ("s", SCHEMA, ["k"]),
-        ("l", METRICS_SCHEMA, ["batch_id"]),
-        ("c", SCHEMA, ["i", "k"]),
+    # multi-bucket tables route rows on the driver only under murmur3 over
+    # string, int and long keys: xxhash64 and other key types refuse
+    dbl = T.StructType([T.StructField("d", T.DoubleType(), True),
+                        T.StructField("v", T.StringType(), True)])
+    for name, schema, keys, props in (
+        ("x", SCHEMA, ["k"], {"bucket_fn": "xxhash64"}),
+        ("d", dbl, ["d"], None),
+        ("m", METRICS_SCHEMA, ["batch_id", "epoch"], {"bucket_fn": "xxhash64"}),
     ):
-        t = LakeTable.create(spark, str(tmp_path / name), schema, keys, 4)
+        t = LakeTable.create(spark, str(tmp_path / name), schema, keys, 4,
+                             props=props)
         r = {f.name: None for f in schema.fields}
-        with pytest.raises(ValueError, match="one int bucket key"):
+        with pytest.raises(ValueError, match="string, int or long bucket keys"):
             t.append_rows([r])
     assert lin.current_snapshot_id() == 0
     assert not (tmp_path / "lin" / "data").exists()
