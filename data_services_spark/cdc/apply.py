@@ -40,11 +40,19 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..lake.table import LakeTable
 from .dedup import lww_dedup
 from .planner import plan_replay, plan_replay_bounds
-from .schemas import KEY_COLS, LINEAGE_SCHEMA, ORDER_COLS, TRANSCRIPTS_SCHEMA
+from .schemas import (
+    CHANGES_SCHEMA,
+    KEY_COLS,
+    LINEAGE_SCHEMA,
+    METRICS_SCHEMA,
+    ORDER_COLS,
+    TRANSCRIPTS_SCHEMA,
+)
 
 
 @dataclass
@@ -294,26 +302,9 @@ class CdcApplier:
             props={"merge_keys": KEY_COLS, "order_cols": ORDER_COLS,
                    **(target_props or {})},
         )
-        lineage = LakeTable.create(
-            spark, f"{root}/lineage", LINEAGE_SCHEMA, ["source_partition"], 4
+        return cls._with_side_tables(
+            spark, root, target, CHANGES_SCHEMA.fields, **kwargs
         )
-        from .schemas import CHANGES_SCHEMA
-        from pyspark.sql import types as T
-
-        q_schema = T.StructType(
-            CHANGES_SCHEMA.fields
-            + [
-                T.StructField("reason", T.StringType(), True),
-                T.StructField("batch_id", T.LongType(), True),
-            ]
-        )
-        quarantine = LakeTable.create(spark, f"{root}/quarantine", q_schema, ["lsn"], 4)
-        from .schemas import METRICS_SCHEMA
-
-        metrics = LakeTable.create(
-            spark, f"{root}/metrics", METRICS_SCHEMA, ["batch_id"], 1
-        )
-        return cls(spark, target, lineage, quarantine, metrics, **kwargs)
 
     @classmethod
     def bootstrap_custom(
@@ -335,8 +326,6 @@ class CdcApplier:
         event time + LSN tiebreak, which also makes replay idempotent).
         ``target_props`` merges extra table properties into the target
         (e.g. ``merge_engine='aggregation'`` + ``agg_functions``)."""
-        from pyspark.sql import types as T
-
         order_cols = list(order_cols or ORDER_COLS)
         names = {f.name for f in schema.fields}
         missing = [c for c in list(merge_keys) + order_cols if c not in names]
@@ -347,11 +336,26 @@ class CdcApplier:
             props={"merge_keys": list(merge_keys), "order_cols": order_cols,
                    **(target_props or {})},
         )
+        return cls._with_side_tables(spark, root, target, schema.fields, **kwargs)
+
+    @classmethod
+    def _with_side_tables(
+        cls,
+        spark: SparkSession,
+        root: str,
+        target: LakeTable,
+        source_fields: list[T.StructField],
+        **kwargs: Any,
+    ) -> "CdcApplier":
+        """The applier of ``target`` with its lineage, quarantine and
+        metrics tables created under ``root``. A quarantine row is a
+        change event of ``source_fields`` (plus ``op`` when they lack it)
+        with the reject reason and batch id."""
         lineage = LakeTable.create(
             spark, f"{root}/lineage", LINEAGE_SCHEMA, ["source_partition"], 4
         )
-        q_fields = list(schema.fields)
-        if "op" not in names:
+        q_fields = list(source_fields)
+        if not any(f.name == "op" for f in q_fields):
             q_fields.append(T.StructField("op", T.StringType(), True))
         q_fields += [
             T.StructField("reason", T.StringType(), True),
@@ -360,8 +364,6 @@ class CdcApplier:
         quarantine = LakeTable.create(
             spark, f"{root}/quarantine", T.StructType(q_fields), ["lsn"], 4
         )
-        from .schemas import METRICS_SCHEMA
-
         metrics = LakeTable.create(
             spark, f"{root}/metrics", METRICS_SCHEMA, ["batch_id"], 1
         )

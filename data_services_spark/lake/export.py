@@ -39,17 +39,21 @@ import uuid
 from typing import Any
 
 from .refs import claim
-from .table import LakeTable
+from .table import _WR_COL, LakeTable
 
 _DELTA_DIR = "_delta_log"
 
 
 def _delta_schema_string(snap) -> str:
-    """Spark-JSON schema string for Delta metaData, with the hive
-    ``bucket`` partition column appended (it lives in directory names,
-    not in the parquet files — the standard Delta partition shape)."""
+    """Spark-JSON schema string for Delta metaData: the columns ``read()``
+    shows (the hidden per-column writer-rank column stays out) with the
+    hive ``bucket`` partition column appended (it lives in directory
+    names, not in the parquet files — the standard Delta partition
+    shape)."""
     schema = dict(snap.schema_json)
-    fields = [f for f in schema.get("fields", []) if f.get("name") != "bucket"]
+    fields = [
+        f for f in schema.get("fields", []) if f.get("name") not in ("bucket", _WR_COL)
+    ]
     fields.append(
         {"name": "bucket", "type": "integer", "nullable": True, "metadata": {}}
     )

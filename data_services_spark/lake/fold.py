@@ -1,13 +1,15 @@
 """The last-writer-wins bucket fold in Arrow, and the diff of two folds.
 
 Every merge key's rows live in one bucket's files, so a bucket folds on
-its own: concatenate its files (:func:`concat_bucket`), then keep one
-winner row per key (:func:`last_writer_wins`). Compaction runs the fold
-in a Spark task per bucket; the key-restricted changelog runs it on the
-driver and diffs the two ends with :func:`diff_winners`; a point lookup
-runs it on the driver over the rows :func:`key_in` its key set.
+its own: read its files into one table (:func:`read_files`), then keep
+one winner row per key (:func:`last_writer_wins`). Compaction and
+tombstone expiry run the fold in a Spark task per bucket; the
+key-restricted changelog runs it on the driver and diffs the two ends
+with :func:`diff_winners`; a point lookup runs it on the driver over the
+rows :func:`key_in` its key set.
 
-Pure functions over ``pyarrow`` tables: no Spark, no files, no session.
+Pure functions over ``pyarrow`` tables and parquet files: no Spark, no
+session, so Spark tasks can carry the module by value.
 """
 
 from __future__ import annotations
@@ -17,22 +19,35 @@ from typing import Any
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 
-def concat_bucket(parts: list[pa.Table], types: dict[str, Any]) -> pa.Table:
-    """One table of a bucket's files, base first, deltas in commit order.
+def read_files(paths: list[str], types: dict[str, Any]) -> tuple[pa.Table, list[int]]:
+    """(one table of the parquet files at ``paths``, in order; each file's
+    row count): a bucket's files, base first, deltas in commit order.
 
+    Timestamps come out as UTC micros: INT96 files read back as naive
+    nanos, INT64 ones as UTC micros, and nanos written out again would be
+    TIMESTAMP(NANOS) parquet, which Spark's vectorized reader refuses.
     ``"permissive"`` (vs ``"default"``) additionally widens numerics
     across files: pre-widen files keep their narrow physical type (type
     widening is metadata-only, mirroring the Spark read path's upcast),
     so a bucket may mix int32 and int64 pages. A column of ``types``
     (name -> Arrow type) absent from every file reads as NULL, as in the
     Spark read path."""
+    utc = pa.timestamp("us", tz="UTC")
+    parts = []
+    for f in paths:
+        part = pq.read_table(f)
+        parts.append(part.cast(pa.schema([
+            fld.with_type(utc) if pa.types.is_timestamp(fld.type) else fld
+            for fld in part.schema
+        ]), safe=False))
     tbl = pa.concat_tables(parts, promote_options="permissive")
     for c, t in types.items():
         if c not in tbl.column_names:
             tbl = tbl.append_column(c, pa.nulls(tbl.num_rows, t))
-    return tbl
+    return tbl, [p.num_rows for p in parts]
 
 
 def last_writer_wins(

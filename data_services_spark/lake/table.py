@@ -656,7 +656,8 @@ def _driver_foldable(snap: "Snapshot") -> bool:
 class _DriverFold:
     """Bucket files of a :func:`_driver_foldable` snapshot read and folded
     on the driver with pyarrow, by ``read()``'s rules: the one file read
-    and live fold of the driver-side changelog and lookup.
+    and live fold of the driver-side changelog and lookup. Compaction's
+    Arrow tasks fold with its merge keys, order, ``keep`` and ``fill``.
 
     ``types`` (name -> Spark type) is the output: every column nullable,
     a column absent from every file read as NULL."""
@@ -675,23 +676,11 @@ class _DriverFold:
         self.fill = {f.name: f.type for f in self.arrow} | {"op": pa.string()}
 
     def read(self, files: list[str]) -> tuple[Any, list[int]]:
-        """(one Arrow table of ``files``, relative to the table root, in
-        order; each file's row count). Timestamps come out as UTC micros:
-        INT96 files read back as naive nanos, INT64 ones as UTC micros."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        """:func:`fold.read_files` of ``files``, relative to the table
+        root, with the output columns absent from every file as NULL."""
+        from .fold import read_files
 
-        from .fold import concat_bucket
-
-        utc = pa.timestamp("us", tz="UTC")
-        parts = []
-        for f in files:
-            t = pq.read_table(os.path.join(self.root, f))
-            parts.append(t.cast(pa.schema([
-                fld.with_type(utc) if pa.types.is_timestamp(fld.type) else fld
-                for fld in t.schema
-            ]), safe=False))
-        return concat_bucket(parts, self.fill), [p.num_rows for p in parts]
+        return read_files([os.path.join(self.root, f) for f in files], self.fill)
 
     def cast(self, tbl: Any) -> Any:
         """``tbl``'s output columns as the output types."""
@@ -717,7 +706,8 @@ def _pin_portable_write_conf(spark: SparkSession) -> None:
     (:meth:`LakeTable.file_stats`), and (b) pyarrow reads INT96 back as
     ``timestamp[ns]``, which the zero-shuffle local compaction would echo
     out as TIMESTAMP(NANOS) — a physical type Spark's vectorized reader
-    refuses. Both are runtime-settable SQLConfs, so pinning here at
+    refuses — were it not for the micros cast in :func:`fold.read_files`.
+    Both are runtime-settable SQLConfs, so pinning here at
     table-handle construction makes every subsequent engine write
     portable regardless of how the session was built."""
     try:
@@ -727,8 +717,8 @@ def _pin_portable_write_conf(spark: SparkSession) -> None:
             )
     except Exception:
         # conf API unavailable (e.g. connect-mode restrictions): the
-        # Arrow-side micros cast in the local rewrite still guarantees
-        # compacted files are portable.
+        # micros cast of the Arrow fold's reader (fold.read_files) still
+        # keeps compacted files portable.
         pass
 
 
@@ -1899,7 +1889,6 @@ class LakeTable:
         df: DataFrame,
         commit_token: str,
         sort_cols: list[str] | None,
-        files_per_bucket: int = 1,
         pre_partitioned: bool = False,
         n_buckets: int | None = None,
     ) -> dict[str, list[str]]:
@@ -1910,8 +1899,7 @@ class LakeTable:
         Rows are clustered so each task holds whole buckets — without this,
         every shuffle partition writes a sliver of every bucket and a commit
         explodes into shuffle_partitions x bucket_count tiny files (fatal at
-        scale: file-count growth + tiny-file reads). ``files_per_bucket > 1``
-        splits giant buckets across that many tasks.
+        scale: file-count growth + tiny-file reads).
 
         ``pre_partitioned=True`` asserts the caller's plan is ALREADY
         hash-partitioned on the bucket keys with the table's murmur3 bucket
@@ -1934,12 +1922,6 @@ class LakeTable:
         # per row), same guarantee as pre_partitioned.
         if pre_partitioned:
             writer = df
-        elif files_per_bucket > 1:
-            split = F.pmod(F.xxhash64(*[F.col(c) for c in (sort_cols or ["bucket"])]),
-                           F.lit(files_per_bucket))
-            n_parts = snap_buckets * files_per_bucket
-            idx = F.pmod(F.col("bucket"), F.lit(snap_buckets)) * files_per_bucket + split
-            writer = df.repartition(n_parts, _exact_partition_salt(idx, n_parts))
         else:
             writer = df.repartition(
                 snap_buckets, _exact_partition_salt(F.col("bucket"), snap_buckets)
@@ -3126,69 +3108,129 @@ class LakeTable:
             out[b] = agg
         return out
 
-    def _rewrite_buckets_local(
+    def _rewrite_buckets(
         self,
-        snap: "Snapshot",
+        operation: str,
+        snap: Snapshot,
+        targets: list[int],
+        summary: dict[str, Any] | None,
+        expire: bool = False,
+        older_than: Any | None = None,
+        max_task_bytes: int | None = None,
+    ) -> Snapshot:
+        """Fold the base and delta files of ``targets`` into new base files
+        and commit them over ``snap`` as ``operation``: the one rewrite of
+        :meth:`compact` and :meth:`expire_tombstones`. Delete winners stay
+        as ``op='D'`` rows (tombstone durability: a stale out-of-order
+        event must keep losing to the delete) unless ``expire``; then the
+        ones whose ``order_cols[0]`` is older than ``older_than`` go, all
+        of them when it is None. LWW and ``first_row`` tables fold in one
+        Arrow task per bucket (:meth:`_fold_buckets_local`);
+        ``partial_update`` and ``aggregation`` tables through the read
+        fold, which runs their per-column writer ranks and merge
+        functions. ``summary`` defaults to ``snap``'s."""
+        token = f"c{snap.snapshot_id + 1}-{uuid.uuid4().hex[:12]}"
+        engine = snap.props.get("merge_engine", "lww")
+        if engine in ("partial_update", "aggregation"):
+            merged = self.read(snap.snapshot_id, buckets=targets, keep_tombstones=True)
+            if expire:
+                # a patch table keeps its pass-through post-death patches:
+                # they are newer than the horizon, so a later re-creation
+                # must still pick them up
+                dead = F.col("op") == "D"
+                if older_than is not None:
+                    ts_col = snap.props["order_cols"][0]
+                    dead = dead & (F.col(ts_col) < F.lit(older_than))
+                merged = merged.where(~dead | F.col("op").isNull())
+            keys = snap.props.get("merge_keys", snap.bucket_keys)
+            # the fold's output is hash-partitioned on the merge keys, which
+            # with a murmur3-bucketed table already clusters whole buckets,
+            # unless read() plans a plain scan of a bucket without deltas
+            new_files = self._write_data_files(
+                self._with_bucket(merged), token, keys,
+                pre_partitioned=self.co_partitioned_write_ok(keys)
+                and all(snap.delta_files.get(str(b)) for b in targets),
+            )
+            # the read fold's 'D' winners go uncounted: some may remain
+            # unless an expiry without a horizon dropped them all
+            kept_tombs = not (expire and older_than is None)
+        else:
+            new_files, n_tombs = self._fold_buckets_local(
+                snap, targets, token, expire, older_than, max_task_bytes
+            )
+            kept_tombs = n_tombs > 0
+        target_set = set(targets)
+        carried = {
+            b: fs for b, fs in snap.bucket_files.items() if int(b) not in target_set
+        }
+        deltas = {
+            b: fs for b, fs in snap.delta_files.items() if int(b) not in target_set
+        }
+        # the read-path flag: an aggregation table never holds a 'D' row;
+        # a compaction leaves the base files (and tombstones) of buckets
+        # without deltas as they were, an expiry rewrites every bucket
+        tombs = engine != "aggregation" and (
+            kept_tombs or (not expire and bool(snap.props.get("base_tombstones")))
+        )
+        return self._commit(
+            operation, new_files, carried, snap.schema,
+            snap.summary if summary is None else summary,
+            snap.snapshot_id, delta_files=deltas,
+            props_update={"base_tombstones": tombs},
+        )
+
+    def _fold_buckets_local(
+        self,
+        snap: Snapshot,
         targets: list[int],
         token: str,
-        keep_tombstones: bool = True,
-        expire_before: Any | None = None,
-        max_task_bytes: int | None = None,
+        expire: bool,
+        older_than: Any | None,
+        max_task_bytes: int | None,
     ) -> tuple[dict[str, list[str]], int]:
-        """Zero-shuffle per-bucket rewrite: one Arrow map task per bucket
-        reads that bucket's base+delta files, resolves last-writer-wins
-        over ``order_cols``, and writes one key-sorted snappy parquet file
-        under the fresh commit dir. Delete winners are RETAINED as
-        ``op='D'`` rows by default (tombstone durability — a stale
-        out-of-order event must keep losing to the delete after
-        compaction); ``keep_tombstones=False`` drops them all and
-        ``expire_before`` (a timestamp) drops only tombstones whose
-        ``order_cols[0]`` is older — the explicit GC horizon. Returns
-        (bucket -> relative file paths, tombstones kept). Runs as
-        ``mapInPandas`` over a tiny (bucket, files...) frame — vectorized
-        Arrow end to end, the only driver round-trip is the O(buckets)
-        result list (same discipline as the LSN offset collect in
-        change_capture). Folds LWW and ``first_row`` tables; callers route
-        ``partial_update`` and ``aggregation`` tables through the read
-        fold."""
-        keys = snap.props.get("merge_keys", snap.bucket_keys)
-        order = snap.props.get("order_cols")
+        """Zero-shuffle per-bucket fold of an LWW or ``first_row`` table for
+        :meth:`_rewrite_buckets`: one Arrow map task per bucket reads that
+        bucket's base+delta files (:func:`fold.read_files`, the driver
+        folds' reader), keeps the last (``first_row``: first) writer per
+        merge key over ``order_cols``, drops the tombstones ``expire`` and
+        ``older_than`` name, and writes one key-sorted snappy parquet file
+        under the fresh commit dir. Returns (bucket -> relative file
+        paths, tombstones kept). Runs as ``mapInPandas`` over a tiny
+        (bucket, files...) frame — vectorized Arrow end to end, the only
+        driver round-trip is the O(buckets) result list (same discipline
+        as the LSN offset collect in change_capture)."""
+        spec = _DriverFold(
+            self.path, snap, {f.name: f.dataType for f in snap.schema.fields}
+        )
+        keys, order, keep, types = spec.keys, spec.order, spec.keep, spec.fill
         if not order:
             raise ValueError(
                 f"table {self.path} has delta layers but no order_cols prop"
             )
         from pyspark import cloudpickle
-        from pyspark.sql.pandas.types import to_arrow_type
 
         from . import fold
-        from .fold import concat_bucket, last_writer_wins
 
         # the tasks carry the fold by value: executors need no import of
         # this package to compact
         cloudpickle.register_pickle_by_value(fold)
-        # first_row tables keep the FIRST of each sorted key run instead of
-        # the last — the only difference between the FWW and LWW rewrites
-        keep = "first" if snap.props.get("merge_engine") == "first_row" else "last"
         cols = [f.name for f in snap.schema.fields]
-        arrow_types = {f.name: to_arrow_type(f.dataType) for f in snap.schema.fields}
         ts_col = order[0]
         commit_rel = os.path.join(_DATA_DIR, token)
         commit_abs = os.path.join(self.path, commit_rel)
-        root = self.path
-        plain = [
-            (
-                b,
-                [os.path.join(root, f) for f in snap.bucket_files.get(str(b), [])],
-                [os.path.join(root, f) for f in snap.delta_files.get(str(b), [])],
-            )
+        files_of = {
+            b: [
+                os.path.join(self.path, f)
+                for f in snap.bucket_files.get(str(b), [])
+                + snap.delta_files.get(str(b), [])
+            ]
             for b in targets
-        ]
-
-        sizes = {r[0]: _files_bytes(r[1] + r[2]) for r in plain}
+        }
+        sizes = {b: _files_bytes(fs) for b, fs in files_of.items()}
         # Hot-bucket sharding: a whole-bucket task is a parallelism CEILING
         # — at 32 cores the 4 hot-conversation buckets (~4x median bytes)
         # alone held the compaction wall above the apply wall. Buckets over
-        # the task ceiling split into k key-hash shards; every shard reads
+        # the task ceiling split into k key shards; every shard reads
         # the bucket's files but keeps only its own keys, so LWW stays
         # per-key exact (a key's rows land in exactly one shard) at the
         # cost of re-reading the hot bucket k times — the same
@@ -3200,10 +3242,10 @@ class LakeTable:
             med = nonzero[len(nonzero) // 2]
             max_task_bytes = max(32 << 20, 2 * med)
         rows = []
-        for b, base_files, delta_files in plain:
+        for b, files in files_of.items():
             k = min(16, max(1, -(-sizes[b] // max_task_bytes)))
             for i in range(k):
-                rows.append((b, base_files, delta_files, i, k))
+                rows.append((b, files, i, k))
 
         # Task placement: exactly ONE (bucket, shard) per partition,
         # biggest first. A hash repartition over the bucket column lands
@@ -3214,15 +3256,13 @@ class LakeTable:
         # task per partition; sorting by on-disk bytes descending is LPT
         # scheduling — big tasks start in the first wave, small ones pack
         # the tail.
-        rows.sort(key=lambda r: sizes[r[0]] // r[4], reverse=True)
+        rows.sort(key=lambda r: sizes[r[0]] // r[3], reverse=True)
         tasks = self.spark.createDataFrame(
             self.spark.sparkContext.parallelize(rows, max(1, len(rows))),
-            "bucket int, base array<string>, delta array<string>, "
-            "shard int, n_shards int",
+            "bucket int, files array<string>, shard int, n_shards int",
         )
 
         def rewrite(batches):
-            import numpy as np
             import pandas as pd
             import pyarrow as pa
             import pyarrow.compute as pc
@@ -3230,102 +3270,45 @@ class LakeTable:
 
             for pdf in batches:
                 out = []
-                for b, base_files, delta_files, shard, n_shards in zip(
-                    pdf["bucket"], pdf["base"], pdf["delta"],
-                    pdf["shard"], pdf["n_shards"],
+                for b, files, shard, n_shards in zip(
+                    pdf["bucket"], pdf["files"], pdf["shard"], pdf["n_shards"]
                 ):
-                    parts = [pq.read_table(f) for f in list(base_files)]
-                    parts += [pq.read_table(f) for f in list(delta_files)]
-                    tbl = concat_bucket(parts, arrow_types)
-                    if int(n_shards) > 1:
-                        # hot-bucket shard: keep only this task's keys.
-                        # hash_pandas_object is deterministic (fixed
-                        # default hash key), so every shard computes the
-                        # same key -> shard assignment and a key's rows
-                        # land in exactly ONE shard — per-key LWW intact
-                        h = pd.util.hash_pandas_object(
-                            tbl.select(list(keys)).to_pandas(), index=False
-                        ).to_numpy()
-                        mask = (h % np.uint64(int(n_shards))) == np.uint64(
-                            int(shard)
-                        )
-                        if not mask.any():
-                            out.append((int(b), None, 0, 0))
-                            continue
-                        tbl = tbl.filter(pa.array(mask))
-                    win = last_writer_wins(tbl, keys, order, keep)
-                    n_tomb = 0
-                    if "op" in win.column_names:
-                        is_tomb = pc.fill_null(
-                            pc.equal(win.column("op"), pa.scalar("D")), False
-                        )
-                        if not keep_tombstones:
-                            win = win.filter(pc.invert(is_tomb))
-                        elif expire_before is not None:
+                    b, shard, n_shards = int(b), int(shard), int(n_shards)
+                    tbl, _ = fold.read_files(list(files), types)
+                    if n_shards > 1:
+                        # hot-bucket shard: every shard reads the same files
+                        # in the same order, so a key gets the same group id
+                        # in each and its rows land in exactly ONE shard
+                        tbl = tbl.filter(pa.array(
+                            fold.key_groups(tbl, keys) % n_shards == shard
+                        ))
+                    win = fold.last_writer_wins(tbl, keys, order, keep)
+                    dead = pc.invert(fold.not_deleted(win)).to_numpy()
+                    if expire:
+                        gone = dead
+                        if older_than is not None:
                             # naive horizon == session wall clock (UTC,
-                            # pinned in session.py); cast to the column's
-                            # exact timestamp type (files carry tz=UTC)
-                            _h = pa.scalar(
-                                expire_before, type=win.column(ts_col).type
-                            )
-                            stale = pc.and_(
-                                is_tomb,
-                                pc.fill_null(
-                                    pc.less(win.column(ts_col), _h), False
-                                ),
-                            )
-                            win = win.filter(pc.invert(stale))
-                        if win.num_rows and "op" in win.column_names:
-                            n_tomb = int(
-                                pc.sum(
-                                    pc.fill_null(
-                                        pc.equal(win.column("op"), pa.scalar("D")),
-                                        False,
-                                    ).cast(pa.int64())
-                                ).as_py()
-                                or 0
-                            )
-                    keep_cols = cols + (
-                        ["op"] if n_tomb and "op" in win.column_names else []
-                    )
-                    win = win.select(keep_cols)
+                            # pinned in session.py)
+                            h = pa.scalar(older_than, type=win.column(ts_col).type)
+                            gone = dead & pc.fill_null(
+                                pc.less(win.column(ts_col), h), False
+                            ).to_numpy()
+                        win, dead = win.filter(pa.array(~gone)), dead[~gone]
+                    n_tomb = int(dead.sum())
                     if win.num_rows == 0:
-                        out.append((int(b), None, 0, 0))
+                        out.append((b, None, 0, 0))
                         continue
-                    # Portability: never echo an input file's physical
-                    # timestamp quirk into the compacted output. Delta
-                    # files written under a session left at the INT96
-                    # default read back as timestamp[ns]; writing that
-                    # out produces TIMESTAMP(NANOS) parquet, which
-                    # Spark's vectorized reader refuses. Cast every
-                    # nanosecond timestamp to microseconds (the lake
-                    # format's on-disk contract) before writing.
-                    _fields = [
-                        pa.field(
-                            f.name,
-                            pa.timestamp("us", tz=f.type.tz),
-                            nullable=f.nullable,
-                        )
-                        if pa.types.is_timestamp(f.type)
-                        and f.type.unit == "ns"
-                        else f
-                        for f in win.schema
-                    ]
-                    win = win.cast(pa.schema(_fields))
-                    bdir = os.path.join(commit_abs, f"bucket={int(b)}")
+                    win = win.select(cols + (["op"] if n_tomb else []))
+                    bdir = os.path.join(commit_abs, f"bucket={b}")
                     os.makedirs(bdir, exist_ok=True)
-                    fname = f"part-{int(shard):05d}.parquet"
+                    fname = f"part-{shard:05d}.parquet"
                     pq.write_table(
                         win, os.path.join(bdir, fname), compression="snappy"
                     )
-                    out.append(
-                        (
-                            int(b),
-                            os.path.join(commit_rel, f"bucket={int(b)}", fname),
-                            win.num_rows,
-                            n_tomb,
-                        )
-                    )
+                    out.append((
+                        b, os.path.join(commit_rel, f"bucket={b}", fname),
+                        win.num_rows, n_tomb,
+                    ))
                 yield pd.DataFrame(out, columns=["bucket", "file", "rows", "tombs"])
 
         result = tasks.mapInPandas(
@@ -3365,12 +3348,12 @@ class LakeTable:
         Memory bound: one bucket per task — ``bucket_count`` is sized so a
         bucket fits an executor. Hot buckets over ``max_task_bytes``
         (default: 2x the median bucket's bytes, floor 32 MiB) split into
-        key-hash SHARDS — one task per shard, each keeping only its own
+        key SHARDS — one task per shard, each keeping only its own
         keys, so a skewed bucket stops being a parallelism ceiling
         (Iceberg's oversized-file-group split); per-key resolution is
-        unaffected because the hash is deterministic. A table whose
-        buckets outgrew their sizing is re-hashed to more buckets with
-        :meth:`rebucket` (``maintain_job --rebucket``)."""
+        unaffected because every shard assigns a key the same shard. A
+        table whose buckets outgrew their sizing is re-hashed to more
+        buckets with :meth:`rebucket` (``maintain_job --rebucket``)."""
         snap = self.snapshot()
         targets = snap.delta_buckets()
         if buckets is not None:
@@ -3378,44 +3361,8 @@ class LakeTable:
             targets = [b for b in targets if b in want]
         if not targets:
             return snap
-        token = f"c{snap.snapshot_id + 1}-{uuid.uuid4().hex[:12]}"
-        if snap.props.get("merge_engine") in ("partial_update", "aggregation"):
-            merged = self.read(buckets=targets, keep_tombstones=True)
-            # the fold's output is hash-partitioned on the merge keys, which
-            # with a murmur3-bucketed table already clusters whole buckets
-            # (every target is delta-bearing, so read() plans no plain scan)
-            merge_keys = snap.props.get("merge_keys", snap.bucket_keys)
-            new_files = self._write_data_files(
-                self._with_bucket(merged), token, merge_keys,
-                pre_partitioned=self.co_partitioned_write_ok(merge_keys),
-            )
-            # kept tombstones are not cheaply countable here; a
-            # delta-bearing bucket may hold 'D' winners, so flag
-            # conservatively (costs only the delete-free fast path)
-            tombs = True
-        else:
-            new_files, n_tombs = self._rewrite_buckets_local(
-                snap, targets, token, max_task_bytes=max_task_bytes
-            )
-            tombs = bool(n_tombs)
-        target_set = set(targets)
-        for b in targets:
-            new_files.setdefault(str(b), [])
-        carried = {
-            b: fs for b, fs in snap.bucket_files.items() if int(b) not in target_set
-        }
-        deltas = {
-            b: fs for b, fs in snap.delta_files.items() if int(b) not in target_set
-        }
-        return self._commit(
-            "compact", new_files, carried, snap.schema,
-            snap.summary if summary is None else summary,
-            snap.snapshot_id, delta_files=deltas,
-            props_update=(
-                {"base_tombstones": True}
-                if tombs or snap.props.get("base_tombstones")
-                else None
-            ),
+        return self._rewrite_buckets(
+            "compact", snap, targets, summary, max_task_bytes=max_task_bytes
         )
 
     def expire_tombstones(
@@ -3462,45 +3409,9 @@ class LakeTable:
         )
         if not targets:
             return snap
-        token = f"c{snap.snapshot_id + 1}-{uuid.uuid4().hex[:12]}"
-        if snap.props.get("merge_engine") == "partial_update":
-            # patch tables GC through the read fold (the Arrow rewrite is
-            # plain-LWW only): drop D winners at/under the horizon, KEEP
-            # the pass-through post-death patches — they are NEWER than
-            # the declared horizon, so a legitimate later re-creation must
-            # still pick them up (the tombstone guarded only the already-
-            # impossible pre-delete events).
-            ts_col = snap.props["order_cols"][0]
-            merged = self.read(buckets=targets, keep_tombstones=True)
-            dead = F.col("op") == "D"
-            if older_than is not None:
-                dead = dead & (F.col(ts_col) < F.lit(older_than))
-            kept = merged.where(~dead | F.col("op").isNull())
-            new_files = self._write_data_files(
-                self._with_bucket(kept), token,
-                sort_cols=list(snap.props.get("merge_keys", snap.bucket_keys)),
-            )
-            for b in targets:
-                new_files.setdefault(str(b), [])
-            return self._commit(
-                "expire_tombstones", new_files, {}, snap.schema,
-                snap.summary if summary is None else summary,
-                snap.snapshot_id, delta_files={},
-                # residual newer-than-horizon tombstones may remain
-                props_update={"base_tombstones": older_than is not None},
-            )
-        new_files, n_kept = self._rewrite_buckets_local(
-            snap, targets, token,
-            keep_tombstones=older_than is not None,
-            expire_before=older_than,
-        )
-        for b in targets:
-            new_files.setdefault(str(b), [])
-        return self._commit(
-            "expire_tombstones", new_files, {}, snap.schema,
-            snap.summary if summary is None else summary,
-            snap.snapshot_id, delta_files={},
-            props_update={"base_tombstones": bool(n_kept)},
+        return self._rewrite_buckets(
+            "expire_tombstones", snap, targets, summary,
+            expire=True, older_than=older_than,
         )
 
     def commit_summary(

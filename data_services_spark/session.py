@@ -55,6 +55,10 @@ def get_spark(
         # the task count on 100TB inputs.
         .config("spark.sql.files.maxPartitionBytes",
                 os.environ.get("SPARK_GRAFT_MAX_PART", "33554432"))
+        # the lake's manifest names every file a read scans: list them on
+        # the driver, not in Spark's distributed listing job that a read of
+        # more than 32 paths (the default) starts first
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # snappy: ~2x faster writes than zstd locally (CPU-bound); flip to

@@ -48,9 +48,8 @@ def snapshot_diff(
     partition ranks locally, and a tiny per-partition count job yields the
     cumulative offsets (collect of ``shuffle_partitions`` rows, never data)
     that a broadcast join adds back — the same two-phase scheme Spark's own
-    global sort uses. The diff is persisted (MEMORY_AND_DISK) so the count
-    pass and the output share one materialization; callers applying the
-    result immediately can ``.unpersist()`` afterwards.
+    global sort uses. The count pass and the output share one
+    materialization of the ranged diff.
     """
     compare_cols = compare_cols or [
         c for c in current.columns if c not in keys and c != ts_col
@@ -96,13 +95,13 @@ def _assign_dense_lsn(
     local row_number -> broadcast-joined partition offsets. No partition of
     the plan ever holds more than one range's rows (a global
     ``Window.orderBy`` would funnel the whole diff through one reducer)."""
-    from pyspark.storagelevel import StorageLevel
-
     spark = events.sparkSession
+    # a local checkpoint, not persist(): the frame returned derives from
+    # ``ranged``, so a cache entry for it could never be unpersisted and
+    # every diff would leave one behind
     ranged = events.repartitionByRange(*[F.col(k) for k in keys]).withColumn(
         "_pid", F.spark_partition_id()
-    )
-    ranged = ranged.persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=True)
     sizes = sorted(
         (r["_pid"], r["count"]) for r in ranged.groupBy("_pid").count().collect()
     )

@@ -7,6 +7,8 @@ same algebra, deletes rejected into quarantine. The standalone
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,6 +136,25 @@ def test_compaction_preserves_fold_exactness(spark, tmp_path):
     assert _rows(applier.target.read()) == _expected(_stream(spark, ROWS))
     applier.target.compact()
     assert _rows(applier.target.read()) == _expected(_stream(spark, ROWS))
+
+
+def test_compacted_table_exports_to_delta(spark, tmp_path):
+    """An aggregation table cannot hold a 'D' row: compaction leaves the
+    base_tombstones flag off, so the compacted table exports, and the
+    Delta schema holds read()'s columns (not the hidden writer-rank
+    column) plus the bucket partition column."""
+    from data_services_spark.lake.export import export_delta_log
+
+    applier = _agg_applier(spark, tmp_path)
+    applier.replay(_stream(spark, ROWS), chunk_size=2)
+    applier.target.compact()
+    assert applier.target.describe()["base_tombstones"] is False
+    out = export_delta_log(applier.target)
+    with open(os.path.join(out["log_dir"], f"{out['version']:020d}.json")) as f:
+        acts = [json.loads(line) for line in f if line.strip()]
+    (meta,) = [a["metaData"] for a in acts if "metaData" in a]
+    names = [fld["name"] for fld in json.loads(meta["schemaString"])["fields"]]
+    assert names == applier.target.read().columns + ["bucket"]
 
 
 def test_duplicate_redelivery_is_not_double_counted(spark, tmp_path):

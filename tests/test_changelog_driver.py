@@ -80,7 +80,6 @@ def _both(t, frm, to, with_before):
     with _bucket_diff():
         slow = t.changes_between(frm, to, with_before=with_before)
     got, want = fast.toArrow(), slow.toArrow().sort_by("lsn")
-    t.spark.catalog.clearCache()  # the bucket diff persists its join
     assert got.schema == want.schema
     return _nan_safe(got), _nan_safe(want), fast.schema, slow.schema
 
@@ -164,6 +163,20 @@ def test_ranges_that_rewrite_files_take_the_bucket_diff(spark, tmp_path, monkeyp
     assert t.changes_between(s4).count() == 1 and len(calls) == 2
     monkeypatch.setattr(table_mod, "_DRIVER_READ_MAX_BYTES", 1)
     assert fallback(s4) == {("d", "U")}  # over the driver's byte cap
+
+
+def test_bucket_diff_leaves_no_cache_entry(spark, tmp_path):
+    """The bucket diff's dense LSNs come from a local checkpoint, not a
+    cache entry that the returned frame could never unpersist."""
+    t = _create(spark, str(tmp_path / "lake"))
+    _delta(spark, t, ROWS, 3)
+    s0 = t.current_snapshot_id()
+    _delta(spark, t, [("a", 1, "x2", 1, 5, 10, "U")], 10)
+    spark.catalog.clearCache()  # entries other tests left
+    with _bucket_diff():
+        rows = t.changes_between(s0).collect()
+    assert [(r["k"], r["op"], r["lsn"]) for r in rows] == [("a", "U", 11)]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_patch_table_changelog_takes_the_bucket_diff(spark, tmp_path, monkeypatch):

@@ -16,8 +16,9 @@ Two independent defenses, each pinned here:
   every bootstrap/create/load path) flips the session to TIMESTAMP_MICROS
   at construction, so engine writes are portable no matter how the session
   was built;
-* the local rewrite casts any nanosecond timestamp to microseconds before
-  ``pq.write_table``, so even pre-existing INT96/nanos input files can
+* the Arrow bucket fold's reader (``fold.read_files``, which compaction
+  shares with the driver-side lookup and changelog) reads every timestamp
+  as UTC microseconds, so even pre-existing INT96/nanos input files can
   never propagate their physical quirk into compacted output.
 """
 
